@@ -332,11 +332,13 @@ def _centroid_local(c1: DataFrame) -> tuple[list, DataFrame]:
     the collected rows and a driver-local DataFrame (r17, VERDICT r16
     item 4).  One bounded action (≤k rows of ≤256 doubles — the
     nprobe-centroid collect class) replaces the former localCheckpoint
-    job + per-_assign re-collect: the local relation broadcasts with
-    no scan job, downstream ``_assign`` calls reuse the rows without
-    touching the cluster, and collect→createDataFrame round-trips
-    binary64 exactly (Python floats are the same IEEE-754 doubles), so
-    every consumer sees bit-identical centroids."""
+    job + per-_assign re-collect.  The frame is not a LocalRelation:
+    ``createDataFrame(list)`` scans a Python RDD, so each collect or
+    broadcast of it still fires jobs.  Downstream ``_assign`` calls
+    reuse the rows without touching the cluster, and
+    collect→createDataFrame round-trips binary64 exactly (Python
+    floats are the same IEEE-754 doubles), so every consumer sees
+    bit-identical centroids."""
     rows = sorted(
         _centroid_arrays(c1).collect(), key=lambda r: r["cluster"]
     )

@@ -38,12 +38,15 @@ is nondeterministic under contention; we pin it down.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .functions.core import content_order_id, valid_order_predicate
 
@@ -79,8 +82,27 @@ class ValidationResult(NamedTuple):
     rejected: DataFrame
 
 
+def local_frame(
+    spark, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A driver-local DataFrame: a LocalRelation built through Arrow.
+    Collecting it fires no Spark job, and the optimizer folds it into
+    the plans that read it (an empty one prunes the joins it feeds).
+    ``spark.createDataFrame(list)`` would instead scan a Python RDD,
+    one job per collect and three per broadcast join; a pandas input
+    takes the same RDD path when it is empty.  ``schema`` is a
+    StructType or a DDL string."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def seed_inventory(spark) -> DataFrame:
-    return spark.createDataFrame(INVENTORY_SEED, INVENTORY_SCHEMA)
+    return local_frame(spark, INVENTORY_SEED, INVENTORY_SCHEMA)
 
 
 def validate_split(raw: DataFrame) -> ValidationResult:
@@ -122,14 +144,19 @@ def dedup_first_writer(
 
 
 def _exploded(orders: DataFrame) -> DataFrame:
+    """One row per order item, each carrying its order's columns (items
+    already JSON-encoded for the orders table) so the per-order
+    decisions need no join back to the orders."""
     return orders.select(
         "order_id",
         "customer_id",
+        F.to_json("items").alias("items"),
         "timestamp",
         F.posexplode("items").alias("item_pos", "item"),
     ).select(
         "order_id",
         "customer_id",
+        "items",
         "timestamp",
         "item_pos",
         F.col("item.product_id").alias("product_id"),
@@ -138,25 +165,50 @@ def _exploded(orders: DataFrame) -> DataFrame:
 
 
 class SettlementResult(NamedTuple):
-    orders: DataFrame      # order_id, customer_id, status, created_at, processed_at
+    # order_id, customer_id, items, status, created_at, processed_at and
+    # consumed: the (product_id, quantity) items the order took from
+    # stock under the mode's rule (ITEM_TYPE; empty when it took none).
+    orders: DataFrame
     inventory: DataFrame   # product_id, product_name, quantity_available
     processed_events: DataFrame  # OrderProcessed stream (README.md:279-288)
 
 
-def _finalize(
-    orders: DataFrame, statuses: DataFrame, inventory: DataFrame, consumed: DataFrame
-) -> SettlementResult:
-    out_orders = (
-        orders.select("order_id", "customer_id", "items", "timestamp")
-        .join(statuses, "order_id")
-        .select(
-            "order_id",
-            "customer_id",
-            F.to_json("items").alias("items"),
-            "status",
-            F.col("timestamp").alias("created_at"),
-            F.col("timestamp").alias("processed_at"),
-        )
+# An OrderProcessed event is this projection of a settled order.
+PROCESSED_EVENT_COLUMNS = ("order_id", "customer_id", "status", "processed_at")
+
+
+def _item() -> Column:
+    return F.struct("product_id", "quantity")
+
+
+def _decide(flagged: DataFrame, consumed: Column) -> DataFrame:
+    """Per-order decisions from item-level outcomes: an order is
+    PROCESSED iff every item fits (``item_ok``); ``consumed`` is an
+    aggregate over its items of what the mode's rule took.  The other
+    keys are functions of order_id (a content hash of customer and
+    items, one timestamp per order after dedup)."""
+    return flagged.groupBy("order_id", "customer_id", "items", "timestamp").agg(
+        F.when(F.bool_and("item_ok"), F.lit("PROCESSED"))
+        .otherwise(F.lit("FAILED"))
+        .alias("status"),
+        consumed.alias("consumed"),
+    )
+
+
+def _finalize(decided: DataFrame, inventory: DataFrame) -> SettlementResult:
+    out_orders = decided.select(
+        "order_id",
+        "customer_id",
+        "items",
+        "status",
+        F.col("timestamp").alias("created_at"),
+        F.col("timestamp").alias("processed_at"),
+        "consumed",
+    )
+    consumed = (
+        out_orders.select(F.inline("consumed"))
+        .groupBy("product_id")
+        .agg(F.sum("quantity").alias("consumed"))
     )
     new_inventory = (
         inventory.join(consumed, "product_id", "left")
@@ -168,9 +220,7 @@ def _finalize(
             ).alias("quantity_available"),
         )
     )
-    processed_events = out_orders.select(
-        "order_id", "customer_id", "status", "processed_at"
-    )
+    processed_events = out_orders.select(*PROCESSED_EVENT_COLUMNS)
     return SettlementResult(out_orders, new_inventory, processed_events)
 
 
@@ -195,27 +245,26 @@ def settle_optimistic(orders: DataFrame, inventory: DataFrame) -> SettlementResu
             F.coalesce(F.col("running") <= F.col("quantity_available"), F.lit(False)),
         )
     )
-    statuses = flagged.groupBy("order_id").agg(
-        F.when(F.bool_and("item_ok"), F.lit("PROCESSED"))
-        .otherwise(F.lit("FAILED"))
-        .alias("status")
+    # All or nothing: a PROCESSED order takes every item, a FAILED one none.
+    decided = _decide(
+        flagged,
+        F.when(F.bool_and("item_ok"), F.collect_list(_item())).otherwise(
+            F.array().cast(ITEM_TYPE)
+        ),
     )
-    consumed = (
-        flagged.join(statuses, "order_id")
-        .filter(F.col("status") == "PROCESSED")
-        .groupBy("product_id")
-        .agg(F.sum("quantity").alias("consumed"))
-    )
-    return _finalize(orders, statuses, inventory, consumed)
+    return _finalize(decided, inventory)
 
 
-_REPLAY_ITEM_SCHEMA = T.StructType(
+# One row per order item: did the settlement rule let it take its stock.
+_ITEM_OUTCOME_SCHEMA = T.StructType(
     [
         T.StructField("order_id", T.StringType(), True),
+        T.StructField("customer_id", T.StringType(), True),
+        T.StructField("items", T.StringType(), True),
+        T.StructField("timestamp", T.TimestampNTZType(), True),
         T.StructField("product_id", T.StringType(), True),
         T.StructField("quantity", T.LongType(), True),
         T.StructField("item_ok", T.BooleanType(), True),
-        T.StructField("remaining_after", T.LongType(), True),
     ]
 )
 
@@ -226,7 +275,8 @@ def settle_replay_items(orders: DataFrame, inventory: DataFrame) -> SettlementRe
     stateful operator).  Whole-order status = AND of its items'
     outcomes — identical to the reference for single-product orders;
     for multi-product orders the item decisions are per-product-local
-    (documented divergence vs the global transactional loop).
+    (documented divergence vs the global transactional loop), so a
+    FAILED order's admitted items still take their stock.
 
     Scale: one shuffle by product_id; per-group state is one counter;
     Arrow-batched. This is the honest distributed form of the
@@ -242,41 +292,17 @@ def settle_replay_items(orders: DataFrame, inventory: DataFrame) -> SettlementRe
         pdf = pdf.sort_values(["timestamp", "order_id", "item_pos"], kind="stable")
         stock_vals = pdf["_stock"].dropna()
         remaining = int(stock_vals.iloc[0]) if len(stock_vals) else -1
-        oks, rems = [], []
+        oks = []
         for q in pdf["quantity"].astype("int64"):
             ok = 0 <= q <= remaining
             if ok:
                 remaining -= int(q)
             oks.append(ok)
-            rems.append(remaining)
-        return pd.DataFrame(
-            {
-                "order_id": pdf["order_id"],
-                "product_id": pdf["product_id"],
-                "quantity": pdf["quantity"],
-                "item_ok": oks,
-                "remaining_after": rems,
-            }
-        )
+        return pdf.assign(item_ok=oks)[_ITEM_OUTCOME_SCHEMA.names]
 
-    flagged = joined.groupBy("product_id").applyInPandas(fold, _REPLAY_ITEM_SCHEMA)
-    statuses = flagged.groupBy("order_id").agg(
-        F.when(F.bool_and("item_ok"), F.lit("PROCESSED"))
-        .otherwise(F.lit("FAILED"))
-        .alias("status")
-    )
-    consumed = flagged.filter(F.col("item_ok")).groupBy("product_id").agg(
-        F.sum("quantity").alias("consumed")
-    )
-    return _finalize(orders, statuses, inventory, consumed)
-
-
-_REPLAY_ORDER_SCHEMA = T.StructType(
-    [
-        T.StructField("order_id", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-    ]
-)
+    flagged = joined.groupBy("product_id").applyInPandas(fold, _ITEM_OUTCOME_SCHEMA)
+    decided = _decide(flagged, F.collect_list(F.when(F.col("item_ok"), _item())))
+    return _finalize(decided, inventory)
 
 
 def settle_replay_global(orders: DataFrame, inventory: DataFrame) -> SettlementResult:
@@ -303,7 +329,7 @@ def settle_replay_global(orders: DataFrame, inventory: DataFrame) -> SettlementR
         for pid, st in zip(pdf["product_id"], pdf["_stock"]):
             if pid not in remaining:
                 remaining[pid] = -1 if pd.isna(st) else int(st)
-        out = []
+        verdicts = {}
         for oid, grp in pdf.groupby("order_id", sort=False):
             # Items decrement sequentially inside the transaction
             # (ref app.py:80-94), so a product repeated within one
@@ -320,17 +346,15 @@ def settle_replay_global(orders: DataFrame, inventory: DataFrame) -> SettlementR
             if ok:
                 for pid, q in tentative.items():
                     remaining[pid] -= q
-            out.append((oid, "PROCESSED" if ok else "FAILED"))
-        return pd.DataFrame(out, columns=["order_id", "status"])
+            verdicts[oid] = ok
+        # Every item carries its whole order's verdict.
+        return pdf.assign(item_ok=pdf["order_id"].map(verdicts))[
+            _ITEM_OUTCOME_SCHEMA.names
+        ]
 
-    statuses = joined.groupBy("_one").applyInPandas(fold, _REPLAY_ORDER_SCHEMA)
-    consumed = (
-        items.join(statuses, "order_id")
-        .filter(F.col("status") == "PROCESSED")
-        .groupBy("product_id")
-        .agg(F.sum("quantity").alias("consumed"))
-    )
-    return _finalize(orders, statuses, inventory, consumed)
+    flagged = joined.groupBy("_one").applyInPandas(fold, _ITEM_OUTCOME_SCHEMA)
+    decided = _decide(flagged, F.collect_list(F.when(F.col("item_ok"), _item())))
+    return _finalize(decided, inventory)
 
 
 def run_checkout_batch(

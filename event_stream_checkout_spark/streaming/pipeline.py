@@ -65,6 +65,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -72,8 +73,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline import (
+    INVENTORY_SCHEMA,
     ITEM_TYPE,
+    PROCESSED_EVENT_COLUMNS,
     derive_order_ids,
+    local_frame,
     run_checkout_batch,
     seed_inventory,
     validate_split,
@@ -98,6 +102,11 @@ _RETRY_SCHEMA = (
     "timestamp timestamp_ntz, attempts long"
 )
 
+_ORDERS_SCHEMA = (
+    "order_id string, customer_id string, items string, status string, "
+    "created_at timestamp_ntz, processed_at timestamp_ntz, batch_id long"
+)
+
 # Predicate factories take the candidate DataFrame and return a boolean
 # Column; True = this record fails that stage on this attempt.  They
 # model the reference's two failure surfaces: the ingest Lambda's queue
@@ -107,7 +116,7 @@ _RETRY_SCHEMA = (
 # CONTRACT: the returned Column must be DETERMINISTIC (a pure function
 # of the row, e.g. a hash/modulo of stable fields — as every test
 # predicate is).  The batch body counts gate legs and re-evaluates the
-# same plans at write time (the one-job gate design), so a predicate
+# same plans at write time (the one-collect gate design), so a predicate
 # sampling randomness could disagree between the gate count and the
 # written rows, and a replayed batch must re-derive identical
 # decisions for idempotence anyway (r3 advisor finding).
@@ -145,25 +154,26 @@ class CheckoutStream:
     # -- state table accessors -------------------------------------------
 
     def current_inventory(self, before_batch: int | None = None) -> DataFrame:
-        """Latest committed inventory version; with ``before_batch``,
-        the latest version strictly below it — the replay-stable
-        pre-batch snapshot (a replayed batch must not read its own
-        tentative version)."""
+        """Latest committed inventory version, as a driver-local frame;
+        with ``before_batch``, the latest version strictly below it —
+        the replay-stable pre-batch snapshot (a replayed batch must not
+        read its own tentative version)."""
         versions = self._versions(self.inv_root)
         if before_batch is not None:
             versions = [v for v in versions if v < before_batch]
         if not versions:
             return seed_inventory(self.spark)
-        return self.spark.read.parquet(
+        rows = self.spark.read.schema(INVENTORY_SCHEMA).parquet(
             os.path.join(self.inv_root, f"v{max(versions)}")
-        )
+        ).collect()
+        return local_frame(self.spark, rows, INVENTORY_SCHEMA)
 
     def pending_retries(self, before_batch: int | None = None) -> DataFrame:
         versions = self._versions(self.retry_root)
         if before_batch is not None:
             versions = [v for v in versions if v < before_batch]
         if not versions:
-            return self.spark.createDataFrame([], _RETRY_SCHEMA)
+            return local_frame(self.spark, [], _RETRY_SCHEMA)
         # Explicit schema: a drained retry version is an EMPTY parquet
         # dir (consumed-state must be overwritten even when empty, or a
         # later batch would re-read and re-process stale retries).
@@ -184,26 +194,11 @@ class CheckoutStream:
                 out.append(int(name[1:]))
         return out
 
-    def existing_orders(self, before_batch: int | None = None) -> DataFrame | None:
-        if not os.path.isdir(self.orders_dir) or not os.listdir(self.orders_dir):
-            return None
-        df = self.spark.read.parquet(self.orders_dir)
-        if before_batch is not None:
-            df = df.filter(F.col("batch_id") < before_batch)
-        return df
-
     def orders_table(self) -> DataFrame:
-        df = self.existing_orders()
-        return (
-            df
-            if df is not None
-            else self.spark.createDataFrame(
-                [],
-                "order_id string, customer_id string, items string, "
-                "status string, created_at timestamp_ntz, "
-                "processed_at timestamp_ntz, batch_id long",
-            )
-        )
+        # Explicit schema: inferring it costs a footer-reading job.
+        if not os.path.isdir(self.orders_dir) or not os.listdir(self.orders_dir):
+            return local_frame(self.spark, [], _ORDERS_SCHEMA)
+        return self.spark.read.schema(_ORDERS_SCHEMA).parquet(self.orders_dir)
 
     # -- the micro-batch body (pure M2 logic + idempotent writes) --------
 
@@ -216,17 +211,30 @@ class CheckoutStream:
         long-running fault-injection stream steadily accumulates
         executor storage (advisor r6).  A checkpointed Dataset's plan
         root is the LogicalRDD wrapping the persisted RDD; unpersist
-        it once the batch's writes are durable (the frames are
-        per-batch and a replay rebuilds them from source + committed
-        state)."""
+        it once the batch ends (the frames are per-batch and a replay
+        rebuilds them from source + committed state)."""
         try:
             df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
-            pass  # cleanup must never fail a committed batch
+            pass  # cleanup must never fail a batch or mask its error
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Pins to release once this batch's writes are durable.
-        _pins: list[DataFrame] = []
+        # Cache before touching _corrupt_record: Spark disallows
+        # queries over raw JSON that reference only the corrupt-record
+        # column, and we also want one stable snapshot per batch.
+        batch_df = batch_df.cache()
+        # Pins to release when the batch ends, committed or refused.
+        pins: list[DataFrame] = []
+        try:
+            self._settle_and_write(batch_df, batch_id, pins)
+        finally:
+            batch_df.unpersist()
+            for pin in pins:
+                self._release_pin(pin)
+
+    def _settle_and_write(
+        self, batch_df: DataFrame, batch_id: int, pins: list[DataFrame]
+    ) -> None:
         # Stale-restart guard: micro-batch ids only move forward.  If
         # the streaming _checkpoint dir is lost while state_dir
         # survives, batch ids restart at 0 and the pre-batch readers
@@ -245,10 +253,6 @@ class CheckoutStream:
                 "reset while state_dir survived; refusing to regress "
                 "committed inventory (delete state_dir to restart clean)"
             )
-        # Cache before touching _corrupt_record: Spark disallows
-        # queries over raw JSON that reference only the corrupt-record
-        # column, and we also want one stable snapshot per batch.
-        batch_df = batch_df.cache()
         corrupt = batch_df.filter(F.col("_corrupt_record").isNotNull())
         parsed = (
             batch_df.filter(F.col("_corrupt_record").isNull())
@@ -279,7 +283,7 @@ class CheckoutStream:
         # lit(False) is deterministic and the hot path stays lazy.
         if self.publish_fail is not None:
             with_ids = with_ids.localCheckpoint()
-            _pins.append(with_ids)
+            pins.append(with_ids)
         responses = (
             corrupt.select(
                 F.lit(400).alias("status_code"),
@@ -320,7 +324,7 @@ class CheckoutStream:
         # two legs (or none).
         if self.process_fail is not None:
             queued = queued.localCheckpoint()
-            _pins.append(queued)
+            pins.append(queued)
         failing = queued.filter(F.col("_fail"))
         to_dlq = failing.filter(F.col("attempts") >= MAX_RECEIVE_COUNT)
         to_retry = (
@@ -337,47 +341,40 @@ class CheckoutStream:
         # ---- settle against the PRE-batch committed state -------------
         # Decisions are a deterministic function of (input, state before
         # this batch_id), so replays after any partial write re-derive
-        # identical results.
-        # One orders-dir read serves both views: the pre-batch filter
-        # (settlement input) and the full table (INSERT IGNORE
-        # anti-join below) — a second read.parquet would re-list and
-        # re-read footers for the same directory every micro-batch.
-        existing = self.existing_orders()
-        pre_batch_orders = (
-            existing.filter(F.col("batch_id") < batch_id)
-            if existing is not None
-            else None
-        )
+        # identical results.  The inventory is driver-local: read once
+        # here, its next version computed on the driver below.
+        inventory = self.current_inventory(before_batch=batch_id)
+        orders = self.orders_table()
         _, res = run_checkout_batch(
             self.spark,
             processable,
-            inventory=self.current_inventory(before_batch=batch_id),
-            existing_orders=pre_batch_orders,
+            inventory=inventory,
+            existing_orders=orders.filter(F.col("batch_id") < batch_id),
             mode=self.mode,
         )
-        # Materialize ALL decisions before any write (T3: decide, then
-        # apply).  The settlement outputs are lazy plans over the very
-        # directories the writes below mutate, and Spark invalidates
-        # caches by path on write (recacheByPath) — so a plain cache()
-        # would silently recompute the inventory AFTER the orders
+        # Materialize ALL decisions in ONE pin before any write (T3:
+        # decide, then apply).  The settlement is a lazy plan over the
+        # very directories the writes below mutate, and Spark
+        # invalidates caches by path on write (recacheByPath) — so a
+        # plain cache() would silently recompute it AFTER the orders
         # append and see its own batch.  localCheckpoint cuts lineage,
-        # pinning the pre-batch snapshot.
-        new_orders = res.orders.localCheckpoint()
-        new_inventory = res.inventory.localCheckpoint()
-        processed = res.processed_events.localCheckpoint()
-        to_retry = to_retry.localCheckpoint()
-        _pins += [new_orders, new_inventory, processed, to_retry]
-
-        # ---- one driver action gates every conditional write ----------
-        # Orders INSERT IGNORE view (anti-join against the FULL table so
-        # a replay after a completed append appends nothing) and the
-        # side-channel frames, all derived from pinned snapshots:
-        orders_out = new_orders.withColumn("batch_id", F.lit(batch_id))
-        if existing is not None:
-            orders_out = orders_out.join(
-                existing.select("order_id"), "order_id", "left_anti"
-            ).localCheckpoint()
-            _pins.append(orders_out)
+        # pinning the pre-batch snapshot; every sink below is a narrow
+        # projection of it.  ``_in_table`` flags orders already in the
+        # FULL table (INSERT IGNORE), so a replay after a completed
+        # append appends nothing.
+        decided = res.orders.withColumn(
+            "_in_table", F.col("order_id").isin(orders.select("order_id"))
+        ).localCheckpoint()
+        pins.append(decided)
+        orders_out = (
+            decided.filter(~F.col("_in_table"))
+            .drop("consumed", "_in_table")
+            .withColumn("batch_id", F.lit(batch_id).cast("long"))
+        )
+        processed = decided.select(*PROCESSED_EVENT_COLUMNS)
+        notify = processed.filter(F.col("status") == "PROCESSED").select(
+            "order_id", "customer_id", "status"
+        )
         bad = (
             split.rejected.select(
                 F.lit("VALIDATION").alias("reason"),
@@ -403,38 +400,37 @@ class CheckoutStream:
                 )
             )
         )
-        notify = processed.filter(F.col("status") == "PROCESSED").select(
-            "order_id", "customer_id", "status"
-        )
-        # The empty-check counts previously ran as ~5 separate driver
-        # actions per micro-batch; a union of single-row aggregates is
-        # ONE job (each leg reads a pinned cache/checkpoint, no
-        # recompute), cutting per-batch scheduling latency.  Two extra
-        # legs fingerprint the batch INPUT (row count + order-free
-        # crc32 checksum over the raw rows) for the stale-checkpoint
-        # guard below — same job, no extra action.
-        gates = {"orders": orders_out, "processed": processed, "bad": bad,
-                 "responses": responses, "notify": notify}
+
+        # ---- one collect gates every write and prices the inventory ---
+        # Every leg is a narrow (k, product_id, n) projection of the pin
+        # or the cached batch, so ONE group-by over their union is one
+        # shuffle: two jobs under AQE (map stage + result), where a
+        # union of per-sink aggregates costs a map-stage job per leg.
+        # The _in legs fingerprint the batch INPUT (row count +
+        # order-free crc32 checksum over the raw rows) for the
+        # stale-checkpoint guard below; the consumed leg is the stock
+        # each product gave up to this batch's decisions.
+        one, no_product = F.lit(1).cast("long"), F.lit(None).cast("string")
         legs = [
-            df.agg(F.count(F.lit(1)).alias("n")).select(
-                F.lit(name).alias("k"), "n"
-            )
-            for name, df in gates.items()
+            df.select(F.lit(k).alias("k"), no_product.alias("product_id"), n.alias("n"))
+            for k, df, n in [
+                ("_in_rows", batch_df, one),
+                ("_in_crc", batch_df, F.crc32(F.to_json(F.struct("*")))),
+                ("orders", orders_out, one),
+                ("processed", processed, one),
+                ("notify", notify, one),
+                ("bad", bad, one),
+                ("responses", responses, one),
+            ]
         ]
         legs.append(
-            batch_df.agg(F.count(F.lit(1)).alias("n")).select(
-                F.lit("_in_rows").alias("k"), "n"
-            )
-        )
-        legs.append(
-            batch_df.agg(
-                F.coalesce(
-                    F.sum(F.crc32(F.to_json(F.struct("*")))), F.lit(0)
-                ).alias("n")
-            ).select(F.lit("_in_crc").alias("k"), "n")
+            decided.select(F.lit("consumed").alias("k"), F.inline("consumed"))
+            .withColumnRenamed("quantity", "n")
         )
         summary = functools.reduce(DataFrame.unionByName, legs)
-        n = {row["k"]: row["n"] for row in summary.collect()}
+        tally = summary.groupBy("k", "product_id").agg(F.sum("n")).collect()
+        gate = Counter({k: n for k, _, n in tally if k != "consumed"})
+        consumed = Counter({pid: n for k, pid, n in tally if k == "consumed"})
 
         # Stale-restart guard, part 2 (r3 advisor finding): ids alone
         # cannot catch a lost checkpoint over a SINGLE-batch history
@@ -445,7 +441,7 @@ class CheckoutStream:
         # a reset checkpoint (refused).  Missing metadata (pre-upgrade
         # state, crash before meta write) degrades to the id-only
         # check.
-        fp = {"rows": int(n["_in_rows"]), "crc": int(n["_in_crc"])}
+        fp = {"rows": gate["_in_rows"], "crc": gate["_in_crc"]}
         # Leading underscore: Spark's file index treats _-prefixed
         # files as metadata and skips them when reading the parquet dir.
         meta_path = os.path.join(
@@ -467,6 +463,11 @@ class CheckoutStream:
         # 1. Versioned state first (inventory, retry): overwrite of
         #    v{batch_id} + _SUCCESS marker = atomic publish; written
         #    unconditionally so a replayed batch always reconverges.
+        new_inventory = local_frame(
+            self.spark,
+            [(pid, name, q - consumed[pid]) for pid, name, q in inventory.collect()],
+            INVENTORY_SCHEMA,
+        )
         new_inventory.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.inv_root, f"v{batch_id}")
         )
@@ -481,8 +482,8 @@ class CheckoutStream:
         )
         if self._crash_after == "state":
             raise RuntimeError("injected crash after state writes")
-        # 2. Orders append (INSERT IGNORE semantics via the anti-join).
-        if n["orders"] > 0:
+        # 2. Orders append (INSERT IGNORE semantics via _in_table).
+        if gate["orders"] > 0:
             orders_out.write.mode("append").parquet(self.orders_dir)
         if self._crash_after == "orders":
             raise RuntimeError("injected crash after orders append")
@@ -491,15 +492,15 @@ class CheckoutStream:
         #    skipped — decisions are deterministic, so a replay could
         #    only ever rewrite identical content, and an all-empty
         #    parquet root breaks schema inference for readers.
-        if n["processed"] > 0:
+        if gate["processed"] > 0:
             processed.write.mode("overwrite").parquet(
                 os.path.join(self.events_dir, f"batch_id={batch_id}")
             )
-        if n["bad"] > 0:
+        if gate["bad"] > 0:
             bad.write.mode("overwrite").parquet(
                 os.path.join(self.quarantine_dir, f"batch_id={batch_id}")
             )
-        if n["responses"] > 0:
+        if gate["responses"] > 0:
             responses.write.mode("overwrite").parquet(
                 os.path.join(self.responses_dir, f"batch_id={batch_id}")
             )
@@ -507,13 +508,10 @@ class CheckoutStream:
         #    fire-and-forget — at-least-once, errors swallowed
         #    (notification_sender/app.py:24-26).
         try:
-            if n["notify"] > 0:
+            if gate["notify"] > 0:
                 notify.write.mode("append").parquet(self.notify_dir)
         except Exception:
             pass  # notifier swallows (notification_sender/app.py:24-26)
-        batch_df.unpersist()
-        for _p in _pins:
-            self._release_pin(_p)
 
     # -- wiring ----------------------------------------------------------
 
