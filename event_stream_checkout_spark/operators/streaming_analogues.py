@@ -674,7 +674,7 @@ def q_stream_type_counts_tws_ttl(
             try:
                 n_rows = spark.read.parquet(out_dir).count()
             except Exception:  # noqa: BLE001 — sink not committed yet
-                n_rows = 0
+                n_rows = -1  # even an empty result waits for the sink
             if n_rows >= n_expected:
                 break
             time.sleep(0.5)

@@ -763,6 +763,55 @@ def test_process_batch_job_budget(stream_env):
     assert 0 < warm <= 17 + 3, f"{warm} jobs in the warm batch"
 
 
+def test_warm_batch_reuses_generated_code(stream_env):
+    """Three micro-batches of the same shape (a new single-item order,
+    a new two-item order, a validation reject, a malformed line and a
+    resubmission of batch 0's first order): the third reuses the
+    generated classes of the second, so Janino compiles at most 4
+    classes for it (a 100-entry cache, Spark's default, evicted them
+    all and recompiled ~60-90 per batch).  The 4 that remain are two
+    classes whose code inlines the ``batch_id`` literal — the pre-batch
+    orders scan (``batch_id < N``) and the ``orders_out`` projection
+    (``lit(batch_id)``) — each compiled twice: Spark's cache is keyed
+    by (context class loader, source), and the same source is compiled
+    once on the driver thread, which prepares the whole-stage plan, and
+    once on the task thread, which runs under the executor's loader."""
+    spark, _input_dir, state_dir = stream_env
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()  # one sample per compile
+    stream = CheckoutStream(spark, state_dir)
+    counts = []
+    for b in range(3):
+        raw = parsed_batch(
+            spark,
+            [
+                order(f"warm-{b}-a", [("prod-101", 1)], 10 * b),
+                order(f"warm-{b}-b", [("prod-102", 1), ("prod-103", 1)], 10 * b + 1),
+                json.dumps({"customer_id": f"warm-{b}-c", "items": [],
+                            "timestamp": iso(10 * b + 2)}),
+                "this is {not valid json",
+                order("warm-0-a", [("prod-101", 1)], 0),
+            ],
+        )
+        c0 = compiled.getCount()
+        stream.process_batch(raw, b)
+        counts.append(compiled.getCount() - c0)
+    assert counts[2] <= 4, f"Janino compiles per batch: {counts}"
+
+
+def test_throughput_sentinels_never_reuse_a_job_group(spark):
+    """tools/stream_throughput.py brackets a run's jobs between two
+    sentinel actions.  A rate listed twice in ``--sweep`` passes the same
+    label twice; each call still gets its own job group, so the ranges
+    are disjoint and increasing (a reused group also returned the
+    earlier call's jobs, and that row's jobs/batch came out negative)."""
+    from tools.stream_throughput import _sentinel_job_ids
+
+    first = _sentinel_job_ids(spark, "tp-pre-2000")
+    second = _sentinel_job_ids(spark, "tp-pre-2000")
+    assert first[0] <= first[1] < second[0] <= second[1]
+
+
 def test_driver_local_state_frames_fire_no_jobs(spark, tmp_path):
     """The seed inventory and the empty retry queue are LocalRelations
     built through Arrow: collecting them fires no Spark job (a

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Per-key profiling: wall time + Spark job count through the noop sink.
+"""Per-key profiling: wall time, Spark jobs and generated-code compiles
+through the noop sink.
 
 Usage: python tools/profile_keys.py key [key ...]
        python tools/profile_keys.py --headline     # bench.py HEADLINE+EXTENDED
@@ -9,7 +10,12 @@ A high job count on a sub-second query means the time is serial
 action/launch overhead (boundary samples, collected scalars, staged
 writes), not data-path compute — the guide §1 "where is the time going"
 question answered without a UI.  Prints one line per key:
-  key  wall_s  n_jobs  n_stages
+  key  wall_s  n_jobs  n_stages  compiles
+where ``compiles`` is the number of Janino classes compiled during the
+key's run in each cycle, e.g. ``64/0`` with PROFILE_CYCLES=2: a warm
+cycle that still compiles means the generated-code cache (session.py)
+is smaller than the working set.  Two last lines sum compiles and wall
+time per cycle.
 """
 
 from __future__ import annotations
@@ -67,18 +73,26 @@ def main() -> None:
 
     cycles = int(os.environ.get("PROFILE_CYCLES", "1"))
     tracker = sc.statusTracker()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()  # one sample per compile
+    compiles: dict[str, list[int]] = {key: [] for key in keys}
+    cycle_wall: list[float] = []
     best: dict[str, float] = {}
     jobs: dict[str, int] = {}
     stages: dict[str, int] = {}
     for cyc in range(cycles):
+        cycle_wall.append(0.0)
         for key in keys:
             group = f"{key}@{cyc}"
             sc.setJobGroup(group, group, False)
+            c0 = compiled.getCount()
             t0 = time.perf_counter()
             registry[key].fn(spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
             dt = time.perf_counter() - t0
+            compiles[key].append(compiled.getCount() - c0)
+            cycle_wall[-1] += dt
             job_ids = tracker.getJobIdsForGroup(group)
             n_stages = 0
             for jid in job_ids:
@@ -95,8 +109,16 @@ def main() -> None:
             gc.collect()
     for key in keys:
         print(
-            f"{key}\t{best[key]:.3f}\t{jobs[key]}\t{stages[key]}", flush=True
+            f"{key}\t{best[key]:.3f}\t{jobs[key]}\t{stages[key]}\t"
+            + "/".join(map(str, compiles[key])),
+            flush=True,
         )
+    per_cycle = [sum(compiles[key][cyc] for key in keys) for cyc in range(cycles)]
+    print("# compiles per cycle\t" + "/".join(map(str, per_cycle)), flush=True)
+    print(
+        "# wall_s per cycle\t" + "/".join(f"{w:.2f}" for w in cycle_wall),
+        flush=True,
+    )
     spark.stop()
 
 

@@ -24,6 +24,7 @@ stops tracking the offered rate.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -34,13 +35,19 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def _sentinel_job_ids(spark, tag: str) -> tuple[int, int]:
-    """(min, max) job id of a sentinel action in a uniquely named
-    group (job groups are thread-local, so the streaming thread's jobs
-    can't be grouped directly — but job ids are globally monotonic, so
-    before/after sentinels bracket them).  One action can spawn
-    several jobs (AQE stages), hence the range."""
+# Numbers every sentinel group, so a rate listed twice in --sweep still
+# gets fresh groups (a reused group also returns the earlier call's jobs).
+_sentinel_seq = itertools.count()
+
+
+def _sentinel_job_ids(spark, label: str) -> tuple[int, int]:
+    """(min, max) job id of a sentinel action in a job group unique to
+    this call (job groups are thread-local, so the streaming thread's
+    jobs can't be grouped directly — but job ids are globally
+    monotonic, so before/after sentinels bracket them).  One action
+    can spawn several jobs (AQE stages), hence the range."""
     sc = spark.sparkContext
+    tag = f"{label}#{next(_sentinel_seq)}"
     sc.setJobGroup(tag, "sentinel")
     try:
         spark.range(1).count()
