@@ -5,7 +5,12 @@
 
 Each query materializes through the noop sink (full execution, no
 driver-side row transfer), timed individually after a session warmup
-so JVM startup doesn't pollute per-query numbers.
+so JVM startup doesn't pollute per-query numbers.  ``warm``,
+``calibrate`` and ``run_key`` are the one copy of that method: the
+timing tools (tools/profile_keys.py, tools/bench_scaling.py) call them
+too, and ``run_key`` also splits each key run into build and exec jobs
+(counted by ``perfbench.measure.job_counters``), which BENCH_DETAIL.json
+records per key under ``counters``.
 
 Noise discipline (SCALE.md "Bench noise analysis"; adopted round 6 per
 the r5 verdict): the suite runs as INTERLEAVED cycles — every query
@@ -26,6 +31,8 @@ linear in data size, <1 = sub-linear (fixed overheads amortizing),
 
 from __future__ import annotations
 
+import gc
+import itertools
 import json
 import math
 import os
@@ -138,11 +145,11 @@ EXTRA = [
     # collapses) — latency-bound by leg count, data-bound per leg.
     "dq_referential_integrity",
     "dq_pk_uniqueness",
-    # r10 heavies: the deflation family shares X50's memoized moment
-    # scan (cycle 1 pays it once for all PCA keys), and the PQ query
-    # path now runs the production K=256 codebooks (256 seeds, 512
-    # LUT scalars) — both benched so the arity bump and any deflation
-    # regression stay visible.
+    # r10 heavies: the deflation family (its moment-scan memo is
+    # cleared before every key run, so each run pays the scan), and
+    # the PQ query path now runs the production K=256 codebooks (256
+    # seeds, 512 LUT scalars) — both benched so the arity bump and any
+    # deflation regression stay visible.
     "llm_pca_components",
     "llm_pq_rerank_topk",
     # r10b: the two closing decision-support shapes — Q3 (segment-
@@ -260,63 +267,117 @@ EXTRA = [
 SF1_RESULTS = Path(__file__).resolve().parent / "BENCH_SF1.json"
 SF10_RESULTS = Path(__file__).resolve().parent / "BENCH_SF10.json"
 
+_runs = itertools.count()
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor a data directory's name carries, -1 if none."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1)) if m else -1.0
+
 
 def _noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _time(fn) -> float:
+def warm(spark, sf_dir: str) -> None:
+    """Start executors, trigger whole-stage codegen + parquet reader
+    init with a representative aggregate, so the first timed key
+    doesn't absorb one-time JVM costs."""
+    from pyspark.sql import functions as F
+
+    _noop(
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+        .groupBy("l_returnflag")
+        .agg(F.sum("l_quantity"))
+    )
+
+
+def calibrate(spark) -> float:
+    """Host-speed calibration (r11): a fixed CPU-bound job that is
+    INDEPENDENT of SF and of any engine code — 200M xxhash64 rows
+    through whole-stage codegen.  Cross-round and paired A/B
+    comparisons divide by this to separate code changes from host
+    drift (the r11 A/B found the host itself 1.5× slower than when the
+    r10 headline was recorded; without a calibration constant every
+    such shift reads as a regression)."""
+    from pyspark.sql import functions as F
+
     t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
+    spark.range(0, 200_000_000, 1, 32).select(
+        F.sum(F.xxhash64("id") % 997)  # mod keeps the ANSI sum in range
+    ).collect()
+    return round(time.perf_counter() - t0, 3)
+
+
+def run_key(spark, label: str, fn, sf_dir: str) -> dict:
+    """One labelled key run: the build step ``fn(spark, sf_dir)`` (the
+    jobs fired while the DataFrame is built: training scans, fixpoint
+    rounds, collects) and the exec step (the final plan's noop write),
+    each timed in its own job group.  Returns both times and their sum
+    (``wall_s``), the Spark counters of ``perfbench.measure`` over both
+    steps plus ``build_jobs`` / ``exec_jobs``, and the Janino classes
+    compiled during the run (``compiles``).
+
+    Before the build, the PCA family's moment memo is cleared: it is
+    the engine's only module-level memo, and a benched run must pay
+    the scan or the series silently turns into a cache-hit
+    measurement.  After the run, the key's pinned frames are released
+    (r12): localCheckpoint blocks are freed by the ContextCleaner only
+    after BOTH the Python DataFrame refs die AND the JVM notices — on a
+    96-key suite at sf10 the lag accumulated into execution-memory
+    OOMs mid-cycle.  Both happen OUTSIDE the timed steps."""
+    from perfbench.measure import SPARK_COUNTERS, job_counters
+
+    from event_stream_checkout_spark.operators.clustering import (
+        _PCA_MOMENT_CACHE,
+    )
+
+    sc = spark.sparkContext
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()  # one sample per compile
+    group = f"{label}#{next(_runs)}"
+    _PCA_MOMENT_CACHE.clear()
+    c0 = compiled.getCount()
+    try:
+        sc.setJobGroup(f"{group}:build", label)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setJobGroup(f"{group}:exec", label)
+        _noop(df)
+        t2 = time.perf_counter()
+    finally:
+        sc.setJobGroup(None, None)
+        df = None
+        gc.collect()
+        sc._jvm.System.gc()
+    build = job_counters(sc, f"{group}:build")
+    exec_ = job_counters(sc, f"{group}:exec")
+    return {
+        "wall_s": t2 - t0,
+        "build_s": t1 - t0,
+        "exec_s": t2 - t1,
+        **{name: build[name] + exec_[name] for name in SPARK_COUNTERS},
+        "build_jobs": build["jobs"],
+        "exec_jobs": exec_["jobs"],
+        "compiles": compiled.getCount() - c0,
+    }
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cycles = int(os.environ.get("SPARK_GRAFT_BENCH_CYCLES", "3"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    sf = scale_factor(sf_dir)
 
-    from event_stream_checkout_spark.operators.relational3 import (
-        bucketed_read,
-        bucketed_write,
-    )
     from event_stream_checkout_spark.registry import load_all
     from event_stream_checkout_spark.session import get_session
 
     spark = get_session("ecs-bench")
     registry = load_all()
 
-    # Warmup: start executors, trigger whole-stage codegen + parquet
-    # reader init with a representative aggregate, so the first timed
-    # query doesn't absorb one-time JVM costs.
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    (
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        .groupBy("l_returnflag")
-        .agg(F.sum("l_quantity"))
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-
-    # Host-speed calibration (r11): a fixed CPU-bound job that is
-    # INDEPENDENT of SF and of any engine code — 200M xxhash64 rows
-    # through whole-stage codegen.  Cross-round headline comparisons
-    # divide by this to separate code changes from host drift (the
-    # r11 A/B found the host itself 1.5× slower than when the r10
-    # headline was recorded; without a calibration constant every
-    # such shift reads as a regression).
-    def _calibrate() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).select(
-            F.sum(F.xxhash64("id") % 997)  # mod keeps the ANSI sum in range
-        ).collect()
-        return round(time.perf_counter() - t0, 3)
-
-    calib = min(_calibrate() for _ in range(3))
+    warm(spark, sf_dir)
+    calib = min(calibrate(spark) for _ in range(3))
 
     # r17 (VERDICT r16 item 2, additions-only methodology change,
     # called out in OPTIMIZATION_r17.md): host-steal waves on this
@@ -330,48 +391,32 @@ def main() -> None:
     # every timed region.
     cycle_calibration: list[float] = []
     samples: dict[str, list[float]] = {}
-
-    def _record(key: str, t: float) -> None:
-        samples.setdefault(key, []).append(round(t, 3))
-
     timings: dict[str, float] = {}
+    # run_key's record of the run behind each key's ``queries`` minimum.
+    counters: dict[str, dict] = {}
     for _cycle in range(cycles):
-        cycle_calibration.append(_calibrate())
+        cycle_calibration.append(calibrate(spark))
         for key in HEADLINE + EXTENDED + EXTRA:
+            run = run_key(spark, key, registry[key].fn, sf_dir)
+            t = run["wall_s"]
+            timed = {key: t}
             if key == "snk_bucketed":
-                t0 = time.perf_counter()
-                names = bucketed_write(spark, sf_dir)
-                tw = time.perf_counter() - t0
-                tr = _time(lambda: _noop(bucketed_read(spark, *names)))
-                for leg, t in (("snk_bucketed_write", tw),
-                               ("snk_bucketed_read", tr)):
-                    timings[leg] = min(timings.get(leg, float("inf")),
-                                       round(t, 3))
-                    _record(leg, t)
-                _record(key, tw + tr)
-                # Blended number = min over PER-CYCLE write+read sums —
-                # the same quantity the r2-r5 series measured (one
-                # combined run per cycle), so series continuity is
-                # exact; the per-leg entries above are each leg's own
-                # min and may come from different cycles (advisor r6:
-                # summing per-leg minima understated the blended time).
-                timings[key] = min(
-                    timings.get(key, float("inf")), round(tw + tr, 3)
-                )
-                continue
-            if key in ("llm_embedding_pca", "llm_pca_components"):
-                # The PCA family memoizes its moment scan per
-                # (session, corpus) — correct for users, but a benched
-                # cycle must pay the scan or the series silently turns
-                # into a cache-hit measurement.
-                from event_stream_checkout_spark.operators.clustering import (
-                    _PCA_MOMENT_CACHE,
-                )
-
-                _PCA_MOMENT_CACHE.clear()
-            t = _time(lambda: _noop(registry[key].fn(spark, sf_dir)))
-            timings[key] = min(timings.get(key, float("inf")), round(t, 3))
-            _record(key, t)
+                # Its build step is the bucketed write and its exec
+                # step the co-located read.  The blended number is the
+                # min over PER-CYCLE write+read sums — the same
+                # quantity the r2-r5 series measured (one combined run
+                # per cycle), so series continuity is exact; the
+                # per-leg entries are each leg's own min and may come
+                # from different cycles (advisor r6: summing per-leg
+                # minima understated the blended time).
+                timed = {"snk_bucketed_write": run["build_s"],
+                         "snk_bucketed_read": run["exec_s"], **timed}
+            for name, s in timed.items():
+                samples.setdefault(name, []).append(round(s, 3))
+                if round(s, 3) < timings.get(name, float("inf")):
+                    timings[name] = round(s, 3)
+                    if name == key:
+                        counters[key] = run
             # progress to STDERR (stdout carries only the JSON line):
             # when a scaled run dies mid-suite (the r11 sf10 OOM), the
             # log must say which key was in flight.
@@ -380,15 +425,6 @@ def main() -> None:
                 file=sys.stderr,
                 flush=True,
             )
-            # Release the key's pinned frames (r12): localCheckpoint
-            # blocks are freed by the ContextCleaner only after BOTH
-            # the Python DataFrame refs die AND the JVM notices — on a
-            # 96-key suite at sf10 the lag accumulated into execution-
-            # memory OOMs mid-cycle.  Runs OUTSIDE the timed section.
-            import gc
-
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
 
     total = round(sum(timings[k] for k in HEADLINE), 3)
     extended = round(sum(timings[k] for k in EXTENDED), 3)
@@ -427,6 +463,7 @@ def main() -> None:
     detail = dict(out)
     detail["queries"] = timings
     detail["samples"] = samples
+    detail["counters"] = counters
     # sf1/sf10 blocks + two-decade scaling exponents
     # (log100(t_sf10 / t_sf0.1), r9 verdict item 5) embed only on the
     # sf0.1 pass, where both comparands exist.

@@ -573,6 +573,8 @@ def _chunked_greedy_replay(
     import pandas as pd
     from pyspark.sql import types as T
 
+    from ..pipeline import take_stock
+
     schema = T.StructType(
         [
             T.StructField("product_id", T.StringType(), True),
@@ -611,22 +613,10 @@ def _chunked_greedy_replay(
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("rn", kind="stable")
         rem = pdf["remaining"].dropna()
-        remaining = int(rem.iloc[0]) if len(rem) else -1
-        rows = []
-        for rn, eid, q, pid in zip(
-            pdf["rn"], pdf["event_id"], pdf["quantity"], pdf["product_id"]
-        ):
-            ok = 0 <= int(q) <= remaining
-            if ok:
-                remaining -= int(q)
-            rows.append((pid, int(rn), int(eid), int(q), ok, remaining))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "product_id", "rn", "event_id", "quantity", "item_ok",
-                "remaining_after",
-            ],
+        oks, after = take_stock(
+            pdf["quantity"], int(rem.iloc[0]) if len(rem) else -1
         )
+        return pdf.assign(item_ok=oks, remaining_after=after)[schema.names]
 
     state = inv.select("product_id", F.col("stock").alias("remaining"))
     outputs = []

@@ -287,8 +287,10 @@ def containment_store(spark: SparkSession, sf_dir: str) -> str:
     # fresh session squeaks through, a warm one OOMs (bisected at
     # sf100 across four runs; the finer-grained stitch ran in 38 s).
     # 8m/16m keep every build task's working set in the tens of MB;
-    # the session-wide trade-off analysis lives in session.py and
-    # scripts/bisect_minpart.py — this override is the build's own.
+    # the session-wide trade-off analysis lives in session.py and in
+    # SCALE.md's "Paired A/B of the global
+    # `spark.sql.files.minPartitionNum=32`" — this override is the
+    # build's own.
     _scoped = {
         "spark.sql.files.maxPartitionBytes": "8m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",

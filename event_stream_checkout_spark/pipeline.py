@@ -105,13 +105,19 @@ def seed_inventory(spark) -> DataFrame:
     return local_frame(spark, INVENTORY_SEED, INVENTORY_SCHEMA)
 
 
-def validate_split(raw: DataFrame) -> ValidationResult:
+def validate_split(
+    raw: DataFrame, extra: Column | None = None
+) -> ValidationResult:
     """Two-way split on the reference's validation predicate (P1/P2).
 
     ``raw`` needs columns: customer_id (string), items
-    (array<struct<product_id,quantity>>), timestamp.
+    (array<struct<product_id,quantity>>), timestamp.  ``extra``, when
+    given, is one more never-null condition a valid row must meet (the
+    stream's wire timestamp parses).
     """
     pred = valid_order_predicate()
+    if extra is not None:
+        pred = pred & extra
     return ValidationResult(valid=raw.filter(pred), rejected=raw.filter(~pred))
 
 
@@ -269,6 +275,25 @@ _ITEM_OUTCOME_SCHEMA = T.StructType(
 )
 
 
+def take_stock(
+    quantities: Iterable[int], stock: int
+) -> tuple[list[bool], list[int]]:
+    """The per-product stock-take kernel: in order, an item takes its
+    quantity ``q`` iff ``0 <= q <= remaining``, else it takes nothing.
+    Returns each item's outcome and the stock remaining after it.  An
+    unknown product starts at -1, so none of its items fit (the
+    reference's `not result` branch, app.py:88)."""
+    oks, after = [], []
+    for q in quantities:
+        q = int(q)
+        ok = 0 <= q <= stock
+        if ok:
+            stock -= q
+        oks.append(ok)
+        after.append(stock)
+    return oks, after
+
+
 def settle_replay_items(orders: DataFrame, inventory: DataFrame) -> SettlementResult:
     """Exact sequential greedy per product (failures take nothing),
     parallel across products via applyInPandas (U5-style custom
@@ -291,13 +316,10 @@ def settle_replay_items(orders: DataFrame, inventory: DataFrame) -> SettlementRe
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["timestamp", "order_id", "item_pos"], kind="stable")
         stock_vals = pdf["_stock"].dropna()
-        remaining = int(stock_vals.iloc[0]) if len(stock_vals) else -1
-        oks = []
-        for q in pdf["quantity"].astype("int64"):
-            ok = 0 <= q <= remaining
-            if ok:
-                remaining -= int(q)
-            oks.append(ok)
+        oks, _ = take_stock(
+            pdf["quantity"].astype("int64"),
+            int(stock_vals.iloc[0]) if len(stock_vals) else -1,
+        )
         return pdf.assign(item_ok=oks)[_ITEM_OUTCOME_SCHEMA.names]
 
     flagged = joined.groupBy("product_id").applyInPandas(fold, _ITEM_OUTCOME_SCHEMA)

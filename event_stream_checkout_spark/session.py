@@ -79,8 +79,9 @@ _RUNTIME_CONFS: dict[str, str] = {
     # number would be thousands.
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
     # NOTE: no global spark.sql.files.minPartitionNum.  Round 4 A/B
-    # (scripts/bisect_minpart.py, n=7 paired, sf0.1) showed the global
-    # 32-way scan minimum taxed every sub-second query 10-17%
+    # (SCALE.md, "Paired A/B of the global
+    # `spark.sql.files.minPartitionNum=32`"; n=7 paired, sf0.1) showed
+    # the global 32-way scan minimum taxed every sub-second query 10-17%
     # (32-task scheduling overhead on 0.3 s scans) while the queries
     # that NEED wide scans for compute-heavy scan-local expressions
     # already get them via tables.with_min_scan_parallelism at their

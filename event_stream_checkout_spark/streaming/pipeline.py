@@ -93,6 +93,11 @@ WIRE_SCHEMA = T.StructType(
     ]
 )
 
+# The reference stamps orders with ``datetime.utcnow().isoformat()``
+# (SURVEY.md F5), which leaves out the fraction when the microsecond is
+# 0: ISO-8601 local date-time, with or without a fraction, no zone.
+_WIRE_TIMESTAMP = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d{1,6})?$"
+
 # SQS redrive policy: a record is received at most this many times
 # before the queue moves it to the DLQ (iac/main.tf:21-24).
 MAX_RECEIVE_COUNT = 3
@@ -254,21 +259,23 @@ class CheckoutStream:
                 "committed inventory (delete state_dir to restart clean)"
             )
         corrupt = batch_df.filter(F.col("_corrupt_record").isNotNull())
-        parsed = (
-            batch_df.filter(F.col("_corrupt_record").isNull())
-            .drop("_corrupt_record")
-            .withColumn(
-                "timestamp",
-                F.to_timestamp_ntz(
-                    F.col("timestamp"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-                ),
-            )
-            .withColumn("attempts", F.lit(1).cast("long"))
+        parsed = batch_df.filter(F.col("_corrupt_record").isNull()).drop(
+            "_corrupt_record"
         )
 
         # ---- ingest stage (S1): validate → publish → respond ----------
-        split = validate_split(parsed)
-        with_ids = derive_order_ids(split.valid)
+        # The wire timestamp is parsed without raising: one unparseable
+        # text must not fail (and, replayed, stall) the whole batch.  A
+        # non-null timestamp that does not parse is a VALIDATION reject
+        # (its raw text kept for the quarantine); a null one stays null.
+        raw_ts = F.col("timestamp")
+        ts = F.when(raw_ts.rlike(_WIRE_TIMESTAMP), raw_ts.try_cast("timestamp_ntz"))
+        split = validate_split(parsed, raw_ts.isNull() | ts.isNotNull())
+        with_ids = derive_order_ids(
+            split.valid.withColumn("timestamp", ts).withColumn(
+                "attempts", F.lit(1).cast("long")
+            )
+        )
         pub_fail_cond = (
             self.publish_fail(with_ids) if self.publish_fail else F.lit(False)
         )

@@ -41,7 +41,7 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from ..pipeline import INVENTORY_SEED
+from ..pipeline import INVENTORY_SEED, take_stock
 from ..session import configure
 
 OUTPUT_SCHEMA = T.StructType(
@@ -58,15 +58,42 @@ ITEM_STREAM_SCHEMA = (
     "product_id string, event_seq long, quantity long, ts timestamp_ntz"
 )
 
+_SEED_STOCK = {pid: qty for pid, _, qty in INVENTORY_SEED}
+
+
+def _ledger_fold(
+    product_id: str,
+    prior: int | None,
+    seed: dict[str, int],
+    pdfs: Iterator[pd.DataFrame],
+) -> tuple[int, pd.DataFrame]:
+    """One product's micro-batch through the ledger: start from its
+    state (``prior``) or, first seen, its seed stock, fold its items
+    in (ts, event_seq) order, and return the stock left plus the
+    output rows.  Unknown product → -1 sentinel: always insufficient,
+    mirroring the reference's `not result` branch (app.py:88)."""
+    remaining = prior if prior is not None else int(seed.get(product_id, -1))
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    pdf = pdf.sort_values(["ts", "event_seq"], kind="stable")
+    oks, after = take_stock(pdf["quantity"], remaining)
+    out = pd.DataFrame(
+        {
+            "product_id": product_id,
+            "event_seq": pdf["event_seq"].to_numpy("int64"),
+            "quantity": pdf["quantity"].to_numpy("int64"),
+            "item_ok": oks,
+            "remaining": after,
+        }
+    )
+    return (after[-1] if after else remaining), out
+
 
 class InventoryLedger(StatefulProcessor):
     """Per-product remaining-stock ValueState; greedy sequential fold
     in (ts, event_seq) order within each micro-batch."""
 
     def __init__(self, seed: dict[str, int] | None = None):
-        self._seed = seed if seed is not None else {
-            pid: qty for pid, _, qty in INVENTORY_SEED
-        }
+        self._seed = seed if seed is not None else _SEED_STOCK
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._remaining = handle.getValueState(
@@ -77,24 +104,12 @@ class InventoryLedger(StatefulProcessor):
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
         (product_id,) = key
-        if self._remaining.exists():
-            remaining = int(self._remaining.get()[0])
-        else:
-            # Unknown product → -1 sentinel: always insufficient,
-            # mirroring the reference's `not result` branch (app.py:88).
-            remaining = int(self._seed.get(product_id, -1))
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_seq"], kind="stable")
-        out = []
-        for seq, q in zip(pdf["event_seq"], pdf["quantity"]):
-            ok = 0 <= int(q) <= remaining
-            if ok:
-                remaining -= int(q)
-            out.append((product_id, int(seq), int(q), ok, remaining))
-        self._remaining.update((remaining,))
-        yield pd.DataFrame(
-            out, columns=["product_id", "event_seq", "quantity", "item_ok", "remaining"]
+        prior = (
+            int(self._remaining.get()[0]) if self._remaining.exists() else None
         )
+        remaining, out = _ledger_fold(product_id, prior, self._seed, rows)
+        self._remaining.update((remaining,))
+        yield out
 
     def close(self) -> None:
         pass
@@ -288,30 +303,14 @@ def inventory_ledger_stream(
     costs ~6x the parquet one and parses ~17x the bytes back).
     """
     configure(spark)
-    seed_map = seed if seed is not None else {
-        pid: qty for pid, _, qty in INVENTORY_SEED
-    }
+    seed_map = seed if seed is not None else _SEED_STOCK
 
     def ledger(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (product_id,) = key
-        if state.exists:
-            (remaining,) = state.get
-            remaining = int(remaining)
-        else:
-            remaining = int(seed_map.get(product_id, -1))
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_seq"], kind="stable")
-        out = []
-        for seq, q in zip(pdf["event_seq"], pdf["quantity"]):
-            ok = 0 <= int(q) <= remaining
-            if ok:
-                remaining -= int(q)
-            out.append((product_id, int(seq), int(q), ok, remaining))
+        prior = int(state.get[0]) if state.exists else None
+        remaining, out = _ledger_fold(product_id, prior, seed_map, pdfs)
         state.update((remaining,))
-        yield pd.DataFrame(
-            out,
-            columns=["product_id", "event_seq", "quantity", "item_ok", "remaining"],
-        )
+        yield out
 
     reader = spark.readStream.schema(ITEM_STREAM_SCHEMA)
     if max_files_per_trigger is not None:

@@ -115,10 +115,15 @@ def _run_one(key, spark, duck, store_lock):
 
 
 @pytest.fixture(scope="session")
-def parity_results(spark, duck):
-    """Run every key's parity check once, overlapped across threads."""
+def parity_results(request, spark, duck):
+    """Run every selected key's parity check once, overlapped across
+    threads: ``pytest -k <key>`` runs that key, not all of them."""
     store_lock = threading.Lock()
-    keys = sorted(QUERIES)
+    keys = sorted(
+        item.callspec.params["key"]
+        for item in request.session.items
+        if getattr(item, "obj", None) is test_parity
+    )
     with ThreadPoolExecutor(max_workers=8) as pool:
         outcomes = list(
             pool.map(lambda k: _run_one(k, spark, duck, store_lock), keys)

@@ -310,6 +310,45 @@ def test_ingest_response_channel(stream_env):
     assert inv["prod-101"] == 49
 
 
+def test_wire_timestamps_parse_without_failing_the_batch(stream_env):
+    """The reference stamps orders with ``datetime.utcnow().isoformat()``,
+    which drops the fraction when the microsecond is 0.  A whole-second
+    timestamp settles like a fractional one; text that is no timestamp
+    is one VALIDATION reject (400 + quarantine row), not a failed
+    batch that a replay would fail again."""
+    spark, _input_dir, state_dir = stream_env
+    stream = CheckoutStream(spark, state_dir)
+    whole = json.loads(order("ts-whole", [("prod-102", 1)], 0))
+    whole["timestamp"] = T0.isoformat()
+    assert "." not in whole["timestamp"]
+    bad = json.loads(order("ts-bad", [("prod-103", 1)], 2))
+    bad["timestamp"] = "x"
+    stream.process_batch(
+        parsed_batch(spark, [
+            order("ts-frac", [("prod-101", 1)], 1),
+            json.dumps(whole),
+            json.dumps(bad),
+        ]),
+        0,
+    )
+
+    resp = sorted(
+        (r["status_code"], r["reason"] or "")
+        for r in spark.read.parquet(stream.responses_dir).collect()
+    )
+    assert resp == [(202, ""), (202, ""), (400, "VALIDATION")]
+    quarantined = spark.read.parquet(stream.quarantine_dir).collect()
+    assert [r["reason"] for r in quarantined] == ["VALIDATION"]
+    assert json.loads(quarantined[0]["payload"])["timestamp"] == "x"
+    created = {
+        r["customer_id"]: r["created_at"] for r in stream.orders_table().collect()
+    }
+    assert created == {
+        "ts-whole": T0,
+        "ts-frac": T0 + dt.timedelta(seconds=1),
+    }
+
+
 @pytest.mark.parametrize("crash_point", ["state", "orders"])
 def test_replay_converges_after_crash(stream_env, crash_point):
     """The idempotency contract: crash after ANY write step, then
