@@ -210,10 +210,11 @@ def _assign(
     over the corpus, zero shuffle, O(k·d) task-side state;
     per-batch memory is bounded by chunking rows so the (rows, k, d)
     tensor stays ≤64 MB.  Precondition (same as the expression path):
-    embedding vectors are non-null, fixed-length — the engine's
-    embeddings contract (the null sweep nulls labels, never vectors).
+    embedding vectors are non-null, fixed-length and finite — the
+    engine's embeddings contract (the null sweep nulls labels, never
+    vectors); ``_clean_embedding_batch`` enforces it per batch and
+    ``_centroid_matrix`` on the centroids.
     """
-    import numpy as np
     import pandas as pd
 
     # ``_rows`` (r17, VERDICT r16 item 4): callers that already hold
@@ -236,9 +237,7 @@ def _assign(
             F.lit(None).cast("long").alias("cluster"),
             F.lit(None).cast("long").alias("dq"),
         )
-    clusters = np.array([r["cluster"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["carr"] for r in rows], dtype=np.float64)
-
+    clusters, cmat = _centroid_matrix(rows)
     d_expect = cmat.shape[1]
 
     def part(batches):
@@ -265,9 +264,11 @@ def _clean_embedding_batch(pdf, d_expect: int):
     conversion assumes (ADVICE r11: a single bad vector used to fail
     the whole job for every kmeans/PQ/IVF consumer).  NULLs drop — a
     null join key matches no centroid, the semantics of the replaced
-    expression path; a RAGGED vector is corrupt input and fails loudly
-    with its id.  Returns (float64 matrix, filtered pdf) or
-    (None, None) for an emptied batch."""
+    expression path; a RAGGED vector, or one with a NaN/inf element, is
+    corrupt input and fails loudly with its id (a NaN would otherwise
+    floor to a garbage int64 distance and corrupt the centroids).
+    Returns (float64 matrix, filtered pdf) or (None, None) for an
+    emptied batch."""
     import numpy as np
 
     emb = pdf["embedding"]
@@ -284,7 +285,33 @@ def _clean_embedding_batch(pdf, d_expect: int):
             f"_assign: ragged embedding(s) — expected dim "
             f"{d_expect}, offending vec_id(s) {list(bad)}"
         )
-    return np.array(emb.tolist(), dtype=np.float64), pdf
+    vmat = np.array(emb.tolist(), dtype=np.float64)
+    finite = np.isfinite(vmat).all(axis=1)
+    if not finite.all():
+        bad = pdf["vec_id"].to_numpy()[~finite][:5]
+        raise ValueError(
+            "_assign: non-finite (NaN/inf) embedding element(s), "
+            f"offending vec_id(s) {bad.tolist()}"
+        )
+    return vmat, pdf
+
+
+def _centroid_matrix(rows: list):
+    """(cluster ids, float64 centroid matrix) of centroid rows sorted by
+    cluster.  A NaN/inf element fails here, on the driver, with its
+    cluster ids — a seed centroid is the corpus vector whose vec_id is
+    its cluster id."""
+    import numpy as np
+
+    clusters = np.array([r["cluster"] for r in rows], dtype=np.int64)
+    cmat = np.array([r["carr"] for r in rows], dtype=np.float64)
+    finite = np.isfinite(cmat).all(axis=1)
+    if not finite.all():
+        raise ValueError(
+            "non-finite (NaN/inf) centroid element(s), offending "
+            f"cluster(s) {clusters[~finite][:5].tolist()}"
+        )
+    return clusters, cmat
 
 
 def _batch_argmin(vmat, cmat):
@@ -380,9 +407,9 @@ def _lloyd_centroids(t: DataFrame, seed_rows: list) -> DataFrame:
         return spark.createDataFrame(
             [], "cluster long, dim int, cval double"
         )
-    srows = sorted(seed_rows, key=lambda r: r["cluster"])
-    clusters = np.array([r["cluster"] for r in srows], dtype=np.int64)
-    cmat = np.array([r["carr"] for r in srows], dtype=np.float64)
+    clusters, cmat = _centroid_matrix(
+        sorted(seed_rows, key=lambda r: r["cluster"])
+    )
     k, d_expect = cmat.shape
 
     def part(batches):

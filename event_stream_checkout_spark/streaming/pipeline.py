@@ -6,28 +6,29 @@ DAG:
   file/JSON source (S1/S2, standing in for the HTTP+queue edge)
     → from_json with explicit schema + corrupt-record channel (P3)
     → foreachBatch( validate → identity → dedup → settle )  (M2 module)
-        ├─ orders table, append, first-writer-wins   (S6)
+        ├─ orders table, batch_id=N partition        (S6)
         ├─ inventory, versioned atomic swap          (T1/S6)
-        ├─ OrderProcessed events, append             (S4/S5)
+        ├─ OrderProcessed events, batch_id=N partition (S4/S5)
         ├─ rejected + corrupt rows → quarantine      (P2/S11/T4)
         └─ notifications: status=='PROCESSED' proj   (P4/P5/S9)
 
 Delivery semantics: the file source is at-least-once into
-foreachBatch; replays are safe because every micro-batch is a
-DETERMINISTIC function of the pre-batch committed state plus
-independently idempotent writes:
+foreachBatch; replays are safe because every micro-batch decides
+against the committed state as of *before its batch_id* and every
+write replaces what an earlier attempt of that batch_id wrote:
 
-- decisions (validation, dedup, settlement) are computed against the
-  state as of *before this batch_id* — orders rows carry a ``batch_id``
-  column and inventory/retry state are versioned by batch_id, so a
-  replayed batch re-derives exactly the same decisions no matter which
+- decisions (validation, dedup, settlement) read only state below this
+  batch_id — the orders table is partitioned by ``batch_id`` (INSERT
+  IGNORE, src/order_processor/app.py:66-75, is the anti-join against
+  the partitions below it) and inventory/retry state are versioned by
+  batch_id, so a replay sees the same pre-batch state no matter which
   of its writes already landed;
-- inventory/retry/events/quarantine/responses are written as
-  per-batch-id versions or partitions with ``overwrite`` (+ _SUCCESS
-  marker = atomic publish) — rewriting them is a no-op;
-- the orders append anti-joins against the FULL orders table at write
-  time (INSERT IGNORE, src/order_processor/app.py:66-75), so a replay
-  after a completed append appends nothing;
+- inventory/retry are per-batch versions written with ``overwrite``
+  (+ _SUCCESS marker = atomic publish); orders/events/quarantine/
+  responses are per-batch ``batch_id=N`` partitions, overwritten when
+  the attempt has rows and removed when it has none — so the last
+  attempt's decisions are the ones committed, in every sink, even when
+  a fault predicate decided differently on the attempt it replaced;
 - notifications are the reference's fire-and-forget notifier —
   at-least-once by design (notification_sender/app.py:24-26).
 
@@ -65,6 +66,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 from collections import Counter
 from collections.abc import Callable
 
@@ -118,13 +120,13 @@ _ORDERS_SCHEMA = (
 # publish (HTTP 500, src/ingest_order/app.py:48-53) and the processor
 # Lambda raising mid-record (SQS redelivery, app.py:45-48).
 #
-# CONTRACT: the returned Column must be DETERMINISTIC (a pure function
-# of the row, e.g. a hash/modulo of stable fields — as every test
-# predicate is).  The batch body counts gate legs and re-evaluates the
-# same plans at write time (the one-collect gate design), so a predicate
-# sampling randomness could disagree between the gate count and the
-# written rows, and a replayed batch must re-derive identical
-# decisions for idempotence anyway (r3 advisor finding).
+# The predicate is evaluated ONCE per attempt: its verdicts are pinned
+# (localCheckpoint) before they fan out to the responses, the retry/DLQ
+# legs, the settlement and the gate counts, so even a nondeterministic
+# predicate (rand(), a coin-flip UDF) routes each record into exactly
+# one leg.  A replay evaluates it afresh and may decide differently
+# from the attempt it replaces; every per-batch sink is rewritten on
+# each attempt, so the replay's verdicts are the ones committed.
 FailPredicate = Callable[[DataFrame], Column]
 
 
@@ -200,7 +202,8 @@ class CheckoutStream:
         return out
 
     def orders_table(self) -> DataFrame:
-        # Explicit schema: inferring it costs a footer-reading job.
+        # Explicit schema: inferring it costs a footer-reading job.  It
+        # also types the ``batch_id=N`` partition column as long.
         if not os.path.isdir(self.orders_dir) or not os.listdir(self.orders_dir):
             return local_frame(self.spark, [], _ORDERS_SCHEMA)
         return self.spark.read.schema(_ORDERS_SCHEMA).parquet(self.orders_dir)
@@ -222,6 +225,21 @@ class CheckoutStream:
             df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:
             pass  # cleanup must never fail a batch or mask its error
+
+    @staticmethod
+    def _replace_partition(
+        df: DataFrame, root: str, batch_id: int, rows: int
+    ) -> None:
+        """Make ``root/batch_id=N`` hold exactly ``df`` (``rows`` rows):
+        overwritten when it has rows, removed when it has none, so no
+        row of an earlier attempt of the batch survives its replay.  An
+        empty partition is not written: an all-empty parquet root breaks
+        schema inference for readers."""
+        path = os.path.join(root, f"batch_id={batch_id}")
+        if rows > 0:
+            df.write.mode("overwrite").parquet(path)
+        elif os.path.isdir(path):
+            shutil.rmtree(path)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # Cache before touching _corrupt_record: Spark disallows
@@ -346,17 +364,19 @@ class CheckoutStream:
         processable = queued.filter(~F.col("_fail")).drop("_fail", "attempts")
 
         # ---- settle against the PRE-batch committed state -------------
-        # Decisions are a deterministic function of (input, state before
-        # this batch_id), so replays after any partial write re-derive
-        # identical results.  The inventory is driver-local: read once
-        # here, its next version computed on the driver below.
+        # Decisions read only the input and the state before this
+        # batch_id (the orders filter prunes to the partitions below
+        # it), so a replay after any partial write starts from the same
+        # state.  The inventory is driver-local: read once here, its
+        # next version computed on the driver below.
         inventory = self.current_inventory(before_batch=batch_id)
-        orders = self.orders_table()
         _, res = run_checkout_batch(
             self.spark,
             processable,
             inventory=inventory,
-            existing_orders=orders.filter(F.col("batch_id") < batch_id),
+            existing_orders=self.orders_table().filter(
+                F.col("batch_id") < batch_id
+            ),
             mode=self.mode,
         )
         # Materialize ALL decisions in ONE pin before any write (T3:
@@ -364,20 +384,12 @@ class CheckoutStream:
         # very directories the writes below mutate, and Spark
         # invalidates caches by path on write (recacheByPath) — so a
         # plain cache() would silently recompute it AFTER the orders
-        # append and see its own batch.  localCheckpoint cuts lineage,
+        # write and see its own batch.  localCheckpoint cuts lineage,
         # pinning the pre-batch snapshot; every sink below is a narrow
-        # projection of it.  ``_in_table`` flags orders already in the
-        # FULL table (INSERT IGNORE), so a replay after a completed
-        # append appends nothing.
-        decided = res.orders.withColumn(
-            "_in_table", F.col("order_id").isin(orders.select("order_id"))
-        ).localCheckpoint()
+        # projection of it.
+        decided = res.orders.localCheckpoint()
         pins.append(decided)
-        orders_out = (
-            decided.filter(~F.col("_in_table"))
-            .drop("consumed", "_in_table")
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        )
+        orders_out = decided.drop("consumed")
         processed = decided.select(*PROCESSED_EVENT_COLUMNS)
         notify = processed.filter(F.col("status") == "PROCESSED").select(
             "order_id", "customer_id", "status"
@@ -423,7 +435,6 @@ class CheckoutStream:
             for k, df, n in [
                 ("_in_rows", batch_df, one),
                 ("_in_crc", batch_df, F.crc32(F.to_json(F.struct("*")))),
-                ("orders", orders_out, one),
                 ("processed", processed, one),
                 ("notify", notify, one),
                 ("bad", bad, one),
@@ -489,29 +500,21 @@ class CheckoutStream:
         )
         if self._crash_after == "state":
             raise RuntimeError("injected crash after state writes")
-        # 2. Orders append (INSERT IGNORE semantics via _in_table).
-        if gate["orders"] > 0:
-            orders_out.write.mode("append").parquet(self.orders_dir)
+        # 2. Per-batch partitions, replaced: orders (one row per
+        #    settled order, as in the processed events) first, then
+        #    events / quarantine / responses.
+        self._replace_partition(
+            orders_out, self.orders_dir, batch_id, gate["processed"]
+        )
         if self._crash_after == "orders":
-            raise RuntimeError("injected crash after orders append")
-        # 3. Per-batch partitions, overwritten: events / quarantine /
-        #    responses replay as exact rewrites.  Empty partitions are
-        #    skipped — decisions are deterministic, so a replay could
-        #    only ever rewrite identical content, and an all-empty
-        #    parquet root breaks schema inference for readers.
-        if gate["processed"] > 0:
-            processed.write.mode("overwrite").parquet(
-                os.path.join(self.events_dir, f"batch_id={batch_id}")
-            )
-        if gate["bad"] > 0:
-            bad.write.mode("overwrite").parquet(
-                os.path.join(self.quarantine_dir, f"batch_id={batch_id}")
-            )
-        if gate["responses"] > 0:
-            responses.write.mode("overwrite").parquet(
-                os.path.join(self.responses_dir, f"batch_id={batch_id}")
-            )
-        # 4. Notifications (P4/P5): the reference notifier is
+            raise RuntimeError("injected crash after orders write")
+        for df, root, rows in [
+            (processed, self.events_dir, gate["processed"]),
+            (bad, self.quarantine_dir, gate["bad"]),
+            (responses, self.responses_dir, gate["responses"]),
+        ]:
+            self._replace_partition(df, root, batch_id, rows)
+        # 3. Notifications (P4/P5): the reference notifier is
         #    fire-and-forget — at-least-once, errors swallowed
         #    (notification_sender/app.py:24-26).
         try:

@@ -31,6 +31,7 @@ tests/test_scale_features.py::test_ledger_stream_matches_batch_replay:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -126,50 +127,11 @@ class InventoryLedger(StatefulProcessor):
 # ValidateProtobufRuntimeVersion) is set ONLY when the vendored copy is
 # the import source — the wire format is stable across these versions,
 # and a healthy site-packages protobuf keeps its version check intact.
-import os as _os
-
-_VENDOR_ZIP = _os.path.join(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+_VENDOR_ZIP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "_vendor",
     "pbcompat_google.zip",
 )
-# Legacy fallback source if the vendored artifact is ever deleted: the
-# same runtime ships inside the Google Cloud SDK where present.
-_SDK_SITE = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-
-
-def _pbcompat_zip() -> str | None:
-    """The protobuf-runtime zip to put on sys.path / addPyFile: the
-    vendored repo artifact, or (fallback) one rebuilt from a local SDK
-    copy into tmp."""
-    import os
-    import tempfile
-    import zipfile
-
-    if os.path.exists(_VENDOR_ZIP):
-        return _VENDOR_ZIP
-    src = os.path.join(_SDK_SITE, "google", "protobuf")
-    if not os.path.isdir(src):
-        return None
-    zp = os.path.join(tempfile.gettempdir(), "ecs_pbcompat_google.zip")
-    if not os.path.exists(zp):
-        tmp = zp + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_STORED) as z:
-            z.writestr("google/__init__.py", "")
-            for root, dirs, files in os.walk(src):
-                dirs[:] = [d for d in dirs if d != "blaze-out"]
-                for f in files:
-                    if f.endswith(".py"):
-                        p = os.path.join(root, f)
-                        z.write(
-                            p,
-                            os.path.join(
-                                "google",
-                                os.path.relpath(p, os.path.dirname(src)),
-                            ),
-                        )
-        os.replace(tmp, zp)
-    return zp
 
 
 def ensure_protobuf(spark: SparkSession | None = None) -> bool:
@@ -184,21 +146,16 @@ def ensure_protobuf(spark: SparkSession | None = None) -> bool:
     sc.environment carries it to worker ``os.environ`` before any pb2
     import runs there."""
     import importlib
-    import os
     import sys
 
+    zp = _VENDOR_ZIP
     try:
         from google.protobuf import descriptor  # noqa: F401
 
         # A prior call may have bootstrapped this process already; the
         # sys.path marker keeps worker shipping on for later sessions.
-        bootstrapped = any(
-            p in sys.path for p in (_VENDOR_ZIP, _SDK_SITE)
-        )
+        bootstrapped = zp in sys.path
     except ImportError:
-        zp = _pbcompat_zip()
-        if zp is None:
-            return False
         os.environ.setdefault(
             "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true"
         )
@@ -211,9 +168,6 @@ def ensure_protobuf(spark: SparkSession | None = None) -> bool:
             return False
         bootstrapped = True
     if spark is not None and bootstrapped:
-        zp = _pbcompat_zip()
-        if zp is None:
-            return False
         sc = spark.sparkContext
         sc.environment["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
         # Regular python workers pick the zip up via addPyFile; the TWS
@@ -235,9 +189,27 @@ def ensure_protobuf(spark: SparkSession | None = None) -> bool:
 def tws_available() -> bool:
     """transformWithStateInPandas needs protobuf for its state-server
     protocol; this container has none in site-packages, but
-    ensure_protobuf can bootstrap the SDK's pure-python copy. Detect
+    ensure_protobuf can bootstrap the vendored pure-python copy. Detect
     instead of crashing the worker."""
     return ensure_protobuf()
+
+
+def _tws_session(spark: SparkSession) -> None:
+    """What every transformWithStateInPandas wiring needs first:
+    protobuf in the driver and its workers, the engine's session confs,
+    and the RocksDB state store."""
+    if not ensure_protobuf(spark):
+        raise RuntimeError(
+            "transformWithStateInPandas needs google.protobuf and no "
+            "usable copy could be bootstrapped; the "
+            "applyInPandasWithState forms (e.g. inventory_ledger_stream) "
+            "need none"
+        )
+    configure(spark)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
 
 
 def inventory_ledger_stream_tws(
@@ -251,17 +223,7 @@ def inventory_ledger_stream_tws(
     through the TWS stateful ledger (requires a working protobuf
     install — bootstrapped into driver and workers by
     ensure_protobuf where possible)."""
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "usable copy could be bootstrapped; use "
-            "inventory_ledger_stream (applyInPandasWithState) instead"
-        )
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_session(spark)
     reader = spark.readStream.schema(ITEM_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -455,16 +417,7 @@ def session_stream_tws(
 ) -> DataFrame:
     """Wire a staged (user_id, event_id, ts_us, ts) parquet stream
     through the timer-based sessionizer on RocksDB state."""
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "usable copy could be bootstrapped"
-        )
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_session(spark)
     stream = (
         spark.readStream.schema(SESSION_STREAM_SCHEMA)
         .parquet(events_dir)
@@ -672,16 +625,7 @@ def type_counts_stream_tws_ttl(
     bounded-state production wiring (see TypeCounterTTL).  Identical
     to type_counts_stream_tws except timeMode="processingTime" (a TTL
     clock needs a time mode) and the TTL-configured state handle."""
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "usable copy could be bootstrapped"
-        )
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_session(spark)
     stream = spark.readStream.schema(TYPE_COUNT_STREAM_SCHEMA).parquet(
         events_dir
     )
@@ -698,16 +642,7 @@ def concurrency_stream_tws(
 ) -> DataFrame:
     """Wire a staged (day_num, t_us, delta, user_id, s_us) boundary
     stream through the per-day concurrency counter on RocksDB state."""
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "usable copy could be bootstrapped"
-        )
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_session(spark)
     stream = spark.readStream.schema(CONCURRENCY_STREAM_SCHEMA).parquet(
         boundaries_dir
     )
@@ -722,16 +657,7 @@ def concurrency_stream_tws(
 def type_counts_stream_tws(spark: SparkSession, events_dir: str) -> DataFrame:
     """Wire a staged (user_id, event_type) parquet stream through the
     MapState counter on RocksDB state."""
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf and no "
-            "usable copy could be bootstrapped"
-        )
-    configure(spark)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    _tws_session(spark)
     stream = spark.readStream.schema(TYPE_COUNT_STREAM_SCHEMA).parquet(
         events_dir
     )

@@ -4,8 +4,10 @@ idempotent replays, quarantine, and batch/stream equivalence."""
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +17,7 @@ from event_stream_checkout_spark.streaming.pipeline import (
     CheckoutStream,
     streaming_tumbling_counts,
 )
+from perfbench.measure import job_counters
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -389,6 +392,57 @@ def test_replay_converges_after_crash(stream_env, crash_point):
     # Replaying a fully committed batch is also a no-op.
     crashed.process_batch(batch1, 1)
     assert snapshot(crashed) == snapshot(clean)
+
+
+def test_replay_commits_the_replayed_verdicts(stream_env):
+    """The fail predicate is evaluated once per attempt, so a replay may
+    decide differently from the attempt it replaces.  Batch 0 settles
+    FILE1 and crashes after its orders write; its replay fails every
+    order (a transient fault), so cust-1 and cust-2 queue for retry;
+    batch 1 settles FILE2 plus the retries.  Every sink must hold the
+    replay's decisions, not the crashed attempt's: the stock taken
+    equals what the PROCESSED orders hold, no product is oversold, the
+    processed events equal the orders, and cust-4 loses prod-105 to
+    cust-2's retry."""
+    spark, _input_dir, state_dir = stream_env
+    verdicts = iter([False, True, False])  # attempt 1, its replay, batch 1
+    stream = CheckoutStream(
+        spark, state_dir, process_fail=lambda df: F.lit(next(verdicts))
+    )
+    stream._crash_after = "orders"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        stream.process_batch(parsed_batch(spark, FILE1), 0)
+    stream._crash_after = None
+    stream.process_batch(parsed_batch(spark, FILE1), 0)
+    stream.process_batch(parsed_batch(spark, FILE2), 1)
+
+    orders = stream.orders_table().collect()
+    taken = Counter()
+    for r in orders:
+        if r["status"] == "PROCESSED":
+            for item in json.loads(r["items"]):
+                taken[item["product_id"]] += item["quantity"]
+    seed = {pid: q for pid, _, q in P.INVENTORY_SEED}
+    final = {
+        r["product_id"]: r["quantity_available"]
+        for r in stream.current_inventory().collect()
+    }
+    assert {pid: seed[pid] - final[pid] for pid in seed} == {
+        pid: taken[pid] for pid in seed
+    }
+    assert all(taken[pid] <= seed[pid] for pid in seed), taken
+    events = {
+        (r["order_id"], r["status"])
+        for r in spark.read.parquet(stream.events_dir).collect()
+    }
+    assert events == {(r["order_id"], r["status"]) for r in orders}
+    statuses = {r["customer_id"]: r["status"] for r in orders}
+    assert statuses == {
+        "cust-1": "PROCESSED",
+        "cust-2": "PROCESSED",
+        "cust-4": "FAILED",
+        "cust-5": "PROCESSED",
+    }
 
 
 def test_streaming_windowed_counts_match_batch(spark, tmp_path):
@@ -766,63 +820,64 @@ def test_streaming_replay_global_matches_reference_loop(stream_env):
     assert batch_inv["prod-104"] == 2 and batch_inv["prod-105"] == 5
 
 
-def _batch_jobs(spark, stream, lines, batch_id) -> int:
-    """Spark jobs one ``process_batch`` call fires, counted through a
-    job group."""
+_counted = itertools.count()
+
+
+def _batch_counters(spark, stream, lines, batch_id) -> tuple[int, int]:
+    """(Spark jobs, Janino compiles) of one ``process_batch`` call: the
+    jobs of its own job group, counted by ``perfbench.measure``'s
+    ``job_counters``, and one CodegenMetrics sample per compile."""
     sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()
     raw = parsed_batch(spark, lines)
-    tag = f"pb-budget-{batch_id}"
-    sc.setJobGroup(tag, "job budget")
+    group = f"process-batch-{next(_counted)}"
+    c0 = compiled.getCount()
+    sc.setJobGroup(group, "process_batch counters")
     try:
         stream.process_batch(raw, batch_id)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
     finally:
         sc.setJobGroup(None, None)
+    return job_counters(sc, group)["jobs"], compiled.getCount() - c0
 
 
 def test_process_batch_job_budget(stream_env):
     """Per-micro-batch driver-job tripwire.  All of a batch's decisions
     sit in ONE localCheckpoint, every sink is a narrow projection of
     it, and one group-by collect yields the write gates, the input
-    fingerprint and the per-product consumption.  Measured on 4 and 8
-    local cores: 16 jobs for batch 0 over empty state (FILE1: 7 for
-    the pin — batch cache, 3 shuffles, inventory and order-id
-    broadcasts, result — 2 for the collect, 7 writes) and 17 for a
-    warm batch over committed state (FILE2: plus the committed
-    inventory read and the pre-batch anti-join broadcast, one write
-    fewer).  Each bound allows 3 jobs of headroom.  If this fails
-    after an edit, look for a second pin, a per-sink count(), a state
-    read without an explicit schema, or a frame built with
-    createDataFrame(list)."""
+    fingerprint and the per-product consumption.  Measured on 4 local
+    cores: 15 jobs for batch 0 over empty state (FILE1: 6 for the pin
+    — batch cache, 3 shuffles, the inventory broadcast, result — 2 for
+    the collect, 7 writes) and 16 for a warm batch over committed state
+    (FILE2: plus the committed inventory read and the pre-batch
+    anti-join broadcast, one write fewer).  Each bound allows 3 jobs of
+    headroom.  If this fails after an edit, look for a second pin, a
+    per-sink count(), a state read without an explicit schema, or a
+    frame built with createDataFrame(list)."""
     spark, _input_dir, state_dir = stream_env
     stream = CheckoutStream(spark, state_dir)
-    cold = _batch_jobs(spark, stream, FILE1, 0)
-    warm = _batch_jobs(spark, stream, FILE2, 1)
-    assert 0 < cold <= 16 + 3, f"{cold} jobs in batch 0"
-    assert 0 < warm <= 17 + 3, f"{warm} jobs in the warm batch"
+    cold, _ = _batch_counters(spark, stream, FILE1, 0)
+    warm, _ = _batch_counters(spark, stream, FILE2, 1)
+    assert 0 < cold <= 15 + 3, f"{cold} jobs in batch 0"
+    assert 0 < warm <= 16 + 3, f"{warm} jobs in the warm batch"
 
 
 def test_warm_batch_reuses_generated_code(stream_env):
     """Three micro-batches of the same shape (a new single-item order,
     a new two-item order, a validation reject, a malformed line and a
-    resubmission of batch 0's first order): the third reuses the
-    generated classes of the second, so Janino compiles at most 4
-    classes for it (a 100-entry cache, Spark's default, evicted them
-    all and recompiled ~60-90 per batch).  The 4 that remain are two
-    classes whose code inlines the ``batch_id`` literal — the pre-batch
-    orders scan (``batch_id < N``) and the ``orders_out`` projection
-    (``lit(batch_id)``) — each compiled twice: Spark's cache is keyed
-    by (context class loader, source), and the same source is compiled
-    once on the driver thread, which prepares the whole-stage plan, and
-    once on the task thread, which runs under the executor's loader."""
+    resubmission of batch 0's first order): the third reuses every
+    generated class of the second, so Janino compiles none for it (a
+    100-entry cache, Spark's default, evicted them all and recompiled
+    ~60-90 per batch).  No generated code may inline the batch id: the
+    pre-batch orders filter (``batch_id < N``) prunes partitions
+    instead of compiling into the scan, and the orders sink takes its
+    batch id from its ``batch_id=N`` path."""
     spark, _input_dir, state_dir = stream_env
-    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    compiled = codegen.METRIC_COMPILATION_TIME()  # one sample per compile
     stream = CheckoutStream(spark, state_dir)
-    counts = []
-    for b in range(3):
-        raw = parsed_batch(
+    counts = [
+        _batch_counters(
             spark,
+            stream,
             [
                 order(f"warm-{b}-a", [("prod-101", 1)], 10 * b),
                 order(f"warm-{b}-b", [("prod-102", 1), ("prod-103", 1)], 10 * b + 1),
@@ -831,11 +886,11 @@ def test_warm_batch_reuses_generated_code(stream_env):
                 "this is {not valid json",
                 order("warm-0-a", [("prod-101", 1)], 0),
             ],
-        )
-        c0 = compiled.getCount()
-        stream.process_batch(raw, b)
-        counts.append(compiled.getCount() - c0)
-    assert counts[2] <= 4, f"Janino compiles per batch: {counts}"
+            b,
+        )[1]
+        for b in range(3)
+    ]
+    assert counts[2] <= 0, f"Janino compiles per batch: {counts}"
 
 
 def test_throughput_sentinels_never_reuse_a_job_group(spark):
@@ -857,16 +912,16 @@ def test_driver_local_state_frames_fire_no_jobs(spark, tmp_path):
     createDataFrame(list) frame scans a Python RDD, one job each)."""
     sc = spark.sparkContext
     stream = CheckoutStream(spark, str(tmp_path / "state"))
-    sc.setJobGroup("local-frames", "driver-local frames")
+    group = f"local-frames-{next(_counted)}"
+    sc.setJobGroup(group, "driver-local frames")
     try:
         seed = P.seed_inventory(spark).collect()
         retries = stream.pending_retries().collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("local-frames")
     finally:
         sc.setJobGroup(None, None)
     assert [tuple(r) for r in seed] == P.INVENTORY_SEED
     assert retries == []
-    assert list(jobs) == []
+    assert job_counters(sc, group)["jobs"] == 0
 
 
 def test_failed_batch_releases_cache_and_pins(stream_env):

@@ -307,6 +307,47 @@ def test_assign_drops_null_and_rejects_ragged(spark):
         _assign(ragged, cent).collect()
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_non_finite_vectors_fail_with_their_ids(spark, bad):
+    """A NaN/inf vector element is corrupt input: assignment, the Lloyd
+    update and PQ coding fail naming the offending vec_id (NumPy would
+    only warn while flooring it into a garbage int64 distance), and a
+    non-finite seed centroid fails on the driver naming its cluster."""
+    from event_stream_checkout_spark.operators.clustering import (
+        _assign,
+        _lloyd_centroids,
+        pq_code_frame,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    seeds = [
+        Row(cluster=0, carr=[0.0, 0.0, 0.0, 0.0]),
+        Row(cluster=1, carr=[9.0, 9.0, 9.0, 9.0]),
+    ]
+    cent = spark.createDataFrame(seeds)
+    rows = [(0, [0.0, 0.1, 0.0, 0.1]), (1, [9.0, 9.1, 9.0, 9.1]),
+            (5, [0.2, 0.2, 0.2, 0.2]), (7, [0.1, bad, 0.1, 0.1])]
+    corpus = spark.createDataFrame(rows, schema)
+    with pytest.raises(Exception, match=r"non-finite.*vec_id\(s\) \[7\]"):
+        _assign(corpus, cent).collect()
+    with pytest.raises(Exception, match=r"non-finite.*vec_id\(s\) \[7\]"):
+        _lloyd_centroids(corpus, seeds).collect()
+    with pytest.raises(Exception, match=r"non-finite.*vec_id\(s\) \[7\]"):
+        pq_code_frame(corpus, k=2).collect()
+
+    bad_seed = [seeds[0], Row(cluster=1, carr=[9.0, bad, 9.0, 9.0])]
+    clean = spark.createDataFrame(rows[:3], schema)
+    with pytest.raises(ValueError, match=r"cluster\(s\) \[1\]"):
+        _assign(clean, spark.createDataFrame(bad_seed))
+    with pytest.raises(ValueError, match=r"cluster\(s\) \[1\]"):
+        _lloyd_centroids(clean, bad_seed)
+    seeded_bad = spark.createDataFrame(
+        [(0, [0.0, 0.1, 0.0, 0.1]), (1, [bad, 9.1, 9.0, 9.1])] + rows[2:3], schema
+    )
+    with pytest.raises(ValueError, match=r"cluster\(s\) \[1\]"):
+        pq_code_frame(seeded_bad, k=2)
+
+
 # ---------------------------------------------------------------------------
 # ADVICE: quantile_bucketed boundaries are driver-side literals
 # ---------------------------------------------------------------------------
