@@ -67,7 +67,7 @@ HEADLINE = [
     "llm_exact_dedup",       # content-hash dedup
     "llm_similarity_topk",   # brute-force cosine top-k
     "llm_near_dedup",        # minhash LSH banding
-    "state_inventory_replay",# applyInPandas stateful fold (chunked)
+    "state_inventory_replay",# mapInPandas per-product stock-take fold
     "llm_curation_pipeline", # end-to-end curation: quality→dedup→sample
 ]
 

@@ -28,8 +28,9 @@ order is PROCESSED iff, for every item, the running demand for that
 product up to and including this item (ordered by event time, all
 orders counted) fits in stock.  Deterministic, shuffle-parallel by
 product, and SQL-expressible.  The exact sequential replay is also
-provided (``state_inventory_replay``) via applyInPandas per product —
-see golden tests for its semantics vs a pure-Python model.
+provided (``state_inventory_replay``) via ``pipeline.take_stock_in_order``,
+a per-product fold over sorted Arrow batches — see golden tests for its
+semantics vs a pure-Python model.
 
 At 100 TB: items partition by ``product_id`` (the window and the
 inventory join share that partitioning — one shuffle, reused), the
@@ -43,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..pipeline import take_stock_in_order
 from ..registry import register
 from ..tables import load_table
 
@@ -405,6 +407,7 @@ def q_join_created_processed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT order_id, customer_id, status FROM latest WHERE rn = 1",
     doc="Keyed upsert as union + window-latest rewrite (S6; ref "
     "INSERT..ON DUPLICATE KEY UPDATE src/order_processor/app.py:111-118).",
+    builds_store=True,
 )
 def q_snk_orders_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     settled = settled_orders(spark, sf_dir)
@@ -448,6 +451,7 @@ def q_snk_orders_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only semantics, and the current snapshot is the is_current "
     "slice — latest-wins becomes a FILTER, not a rewrite. Versions "
     "are integers, so the history is engine-exact.",
+    builds_store=True,
 )
 def q_snk_orders_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     settled = settled_orders(spark, sf_dir)
@@ -486,6 +490,7 @@ def q_snk_orders_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT event_id, user_id, attempt FROM fails WHERE attempt >= 3",
     doc="Dead-letter diversion after 3 attempts (T4/S11; ref "
     "maxReceiveCount=3 iac/main.tf:21-24).",
+    builds_store=True,
 )
 def q_snk_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "error")
@@ -542,115 +547,25 @@ def q_scan_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     "remaining AS remaining_after FROM st WHERE rn >= 1",
     doc="Keyed mutable state replay (T1; ref FOR UPDATE loop "
     "src/order_processor/app.py:85-94): exact sequential greedy fold "
-    "per product — failures take nothing. INCREMENTAL custom stateful "
-    "operator: the history is chunked by per-key rank, each chunk is an "
-    "Arrow-batched applyInPandas over bounded groups (≤ chunk_rows rows "
-    "in memory per key, never the whole history), and only the O(1) "
-    "carry state (remaining per product) crosses chunk boundaries. "
-    "Sequentiality across chunks of one key is irreducible (the fold "
-    "is order-dependent); chunking bounds MEMORY, keys stay parallel. "
-    "At sf≤0.1 every key fits one chunk, so the plan equals the "
-    "single-pass form.",
+    "per product — failures take nothing. Custom stateful operator "
+    "(pipeline.take_stock_in_order): one shuffle by product_id, items "
+    "sorted by (item_ts, event_id) within each partition, and a "
+    "mapInPandas fold that carries one product's remaining stock "
+    "across Arrow batches, so memory is one batch per task however "
+    "hot the product. Sequentiality within a key is irreducible (the "
+    "fold is order-dependent); keys stay parallel.",
+    builds_store=True,
 )
-def q_state_inventory_replay(
-    spark: SparkSession, sf_dir: str, chunk_rows: int = 65536
-) -> DataFrame:
-    items = order_items(spark, sf_dir)
-    inv = inventory(spark, sf_dir).select("product_id", "stock")
-    return _chunked_greedy_replay(items, inv, chunk_rows)
-
-
-def _chunked_greedy_replay(
-    items: DataFrame, inv: DataFrame, chunk_rows: int
-) -> DataFrame:
-    """Sequential greedy per-key fold with bounded per-group memory.
-
-    One shuffle ranks items per product; chunk k processes ranks
-    (k*chunk_rows, (k+1)*chunk_rows] for EVERY product in parallel,
-    seeded with the carry state from chunk k-1 (a product_id →
-    remaining table, localCheckpoint-pinned so lineage stays flat).
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..pipeline import take_stock
-
-    schema = T.StructType(
-        [
-            T.StructField("product_id", T.StringType(), True),
-            T.StructField("rn", T.LongType(), True),
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("quantity", T.LongType(), True),
-            T.StructField("item_ok", T.BooleanType(), True),
-            T.StructField("remaining_after", T.LongType(), True),
-        ]
+def q_state_inventory_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    items = order_items(spark, sf_dir).select(
+        "product_id", "event_id", "item_ts", "quantity"
     )
-
-    w = Window.partitionBy("product_id").orderBy("item_ts", "event_id")
-    ranked = (
-        items.withColumn("rn", F.row_number().over(w).cast("long"))
-        .select("product_id", "rn", "event_id", "quantity")
+    stock = inventory(spark, sf_dir).select(
+        "product_id", F.col("stock").alias("_stock")
     )
-    # Chunk-count probe (r16): max(rn) over the ranked frame IS the
-    # max per-product row count, so the probe can be a map-side-
-    # combinable groupBy count instead of re-running the full rank
-    # window (guide §2.3 "aggregate before you shuffle"): the old
-    # probe paid the per-product sort+window a SECOND time just to
-    # read one number; this one shuffles 1 partial count per
-    # (task, product) and sorts nothing.  Same n at every SF.
-    n_chunks_row = (
-        items.groupBy("product_id")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(F.ceil(F.max("_c") / F.lit(chunk_rows)).alias("n"))
-        .collect()[0]
+    return take_stock_in_order(items, stock, ["item_ts", "event_id"]).select(
+        "product_id", "rn", "event_id", "quantity", "item_ok", "remaining_after"
     )
-    n_chunks = int(n_chunks_row["n"] or 0)
-    if n_chunks > 1:
-        # Multi-chunk path: pin the ranked table once so each chunk's
-        # filter scans it without recomputing the rank shuffle.
-        ranked = ranked.localCheckpoint()
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn", kind="stable")
-        rem = pdf["remaining"].dropna()
-        oks, after = take_stock(
-            pdf["quantity"], int(rem.iloc[0]) if len(rem) else -1
-        )
-        return pdf.assign(item_ok=oks, remaining_after=after)[schema.names]
-
-    state = inv.select("product_id", F.col("stock").alias("remaining"))
-    outputs = []
-    for k in range(n_chunks):
-        chunk = ranked.filter(
-            (F.col("rn") > k * chunk_rows) & (F.col("rn") <= (k + 1) * chunk_rows)
-        ).join(F.broadcast(state), "product_id", "left")
-        out = chunk.groupBy("product_id").applyInPandas(fold, schema)
-        if n_chunks > 1:
-            out = out.localCheckpoint()
-            # Carry state: last remaining per product this chunk;
-            # untouched products keep their previous state.
-            new_state = out.groupBy("product_id").agg(
-                F.max_by("remaining_after", "rn").alias("remaining")
-            )
-            state = (
-                state.join(
-                    new_state.withColumnRenamed("remaining", "_new"),
-                    "product_id",
-                    "left",
-                )
-                .select(
-                    "product_id",
-                    F.coalesce(F.col("_new"), F.col("remaining")).alias("remaining"),
-                )
-                .localCheckpoint()
-            )
-        outputs.append(out)
-    if not outputs:
-        return ranked.sparkSession.createDataFrame([], schema)
-    result = outputs[0]
-    for out in outputs[1:]:
-        result = result.unionByName(out)
-    return result
 
 
 @register(

@@ -2157,6 +2157,7 @@ _IVFPQ_SHARED_ORACLE = _QUERIES["llm_ivfpq_topk"].oracle
     "bit-identical to llm_ivfpq_topk (same Lloyd math, same "
     "tiebreaks) — graded against the SAME oracle, so the "
     "persistence layer itself is under the hash.",
+    builds_store=True,
 )
 def q_llm_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes_t, cents_t = ivfpq_index_tables(spark, sf_dir)
@@ -2384,6 +2385,7 @@ def ivfpq_refreshed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     "partition append, and the probe.  At 100 TB this is the vector "
     "store's ingest path: per-batch cost is the batch's own coding + "
     "a partition-aligned append — the corpus is never rescanned.",
+    builds_store=True,
 )
 def q_llm_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes_t, cents_t = ivfpq_refreshed_tables(spark, sf_dir)

@@ -113,6 +113,7 @@ _MV_CUTOFF = "DATE '2001-06-01'"
     "running inventory maintenance (UPDATE inventory SET quantity = "
     "quantity - %s, src/order_processor/app.py:85) from one counter "
     "to a full rollup.",
+    builds_store=True,
 )
 def q_agg_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -303,6 +304,7 @@ _INTERVAL_MIN = 30  # purchase within 30 minutes of the view
     "two-readStream form with both watermarks runs in "
     "tests/test_streaming.py::test_stream_stream_interval_join and is "
     "asserted row-identical to this batch frame.",
+    builds_store=True,
 )
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -442,6 +444,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_streaming.py and is asserted row-identical. State "
     "bound: identical to T9 — both sides evict at watermark minus "
     "the range bound; outer emission adds no state, only delay.",
+    builds_store=True,
 )
 def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")

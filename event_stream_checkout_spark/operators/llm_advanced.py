@@ -1629,6 +1629,7 @@ def jaccard_pair_store(spark: SparkSession, sf_dir: str) -> str:
     "the same stored population serves any s >= θ threshold cut as "
     "a filter.  Staleness rides the X12/X60/X62 source-fingerprint "
     "tag.",
+    builds_store=True,
 )
 def q_llm_lsh_tuning_persisted(
     spark: SparkSession, sf_dir: str

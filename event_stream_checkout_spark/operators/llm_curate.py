@@ -1539,6 +1539,7 @@ def cross_source_span_store(spark: SparkSession, sf_dir: str) -> str:
     "and the graded probe is a stored-table scan + scan-local pair "
     "expansion + the #sources² aggregate with zero documents scans "
     "(same oracle, byte-identical output).",
+    builds_store=True,
 )
 def q_llm_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Probe path (r16): the folded per-gram source-count frame comes
@@ -1887,6 +1888,7 @@ def minhash_calib_tables(
     "#docs × 8 md5s + collision-sized buckets + candidate-gated "
     "arrays, all orders of magnitude under the corpus.  Staleness "
     "rides the X12/X60/X62 source-fingerprint tag.",
+    builds_store=True,
 )
 def q_llm_minhash_calibration_persisted(
     spark: SparkSession, sf_dir: str

@@ -167,6 +167,7 @@ _X12_ORACLE = (
     "slim precomputed indexes (4 band rows + 1 hash/doc), not a "
     "corpus re-scan — exactly how a day-2 ingest pipeline holds its "
     "dedup index.",
+    builds_store=True,
 )
 def q_llm_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = with_min_scan_parallelism(
@@ -406,6 +407,7 @@ def probe_index(idx: DataFrame, new: DataFrame) -> DataFrame:
     "is the same SQL as the in-query variant: a persisted index is a "
     "layout choice and must not change results (snk_bucketed "
     "discipline).",
+    builds_store=True,
 )
 def q_llm_incremental_dedup_indexed(
     spark: SparkSession, sf_dir: str
@@ -542,6 +544,7 @@ def refreshed_index_table(spark: SparkSession, sf_dir: str) -> str:
     "so a green grade proves append-refresh ≡ from-scratch rebuild; "
     "the engine-side equivalence is additionally pinned by "
     "tests/test_variant_equivalence.py::test_index_refresh_matches_rebuild.",
+    builds_store=True,
 )
 def q_llm_incremental_index_refresh(
     spark: SparkSession, sf_dir: str
@@ -612,6 +615,7 @@ def compacted_index_table(spark: SparkSession, sf_dir: str) -> str:
     "probe over the compacted table must classify identically to the "
     "probe over the fragmented one. Completes the index lifecycle: "
     "build (day 1) → probe → append-refresh (day N) → compact.",
+    builds_store=True,
 )
 def q_llm_incremental_index_compact(
     spark: SparkSession, sf_dir: str

@@ -456,6 +456,7 @@ def _containment_store_build(
     "corpus half of X54 (measured: 28.6M co-occurring pairs at "
     "sf10), and probing it per query is what kept X54 at 161 s.  "
     "Staleness rides the X12/X60/X62 source-fingerprint tag.",
+    builds_store=True,
 )
 def q_llm_containment_pairs_persisted(
     spark: SparkSession, sf_dir: str
@@ -925,6 +926,7 @@ def cm_sketch_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     "ZERO text re-scans (plan contract pins the probe reading only "
     "the sketch tables); the oracle replays the identical "
     "integer protocol end to end.",
+    builds_store=True,
 )
 def q_llm_cm_sketch_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells_t, cands_t = cm_sketch_tables(spark, sf_dir)

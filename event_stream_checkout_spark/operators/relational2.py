@@ -181,6 +181,7 @@ def q_fn_conditional(spark, sf_dir):
     "src/ingest_order/app.py:43-53): canonical JSON with sorted keys "
     "and ISO-8601 naive-UTC timestamp, exactly the reference's message "
     "shape (README.md:265-277).",
+    builds_store=True,
 )
 def q_snk_order_created(spark, sf_dir):
     from .checkout import order_items
@@ -221,6 +222,7 @@ def q_snk_order_created(spark, sf_dir):
     "FROM settled",
     doc="OrderProcessed wire-format sink (S5; ref "
     "publish_processed_event src/order_processor/app.py:126-143).",
+    builds_store=True,
 )
 def q_snk_order_processed(spark, sf_dir):
     settled = settled_orders(spark, sf_dir)

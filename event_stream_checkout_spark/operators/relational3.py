@@ -367,6 +367,7 @@ def bucketed_read(
     "not change results, only the plan. Benched as separate write/read "
     "legs (bucketed_write / bucketed_read) so the pay-once cost and "
     "the recurring read are priced individually.",
+    builds_store=True,
 )
 def q_snk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li_name, ord_name = bucketed_write(spark, sf_dir)
@@ -437,6 +438,7 @@ def bucketed_register_existing(
     "proving the pay-once shuffle is paid once per LAYOUT, not once "
     "per session. Same oracle as snk_bucketed: catalog plumbing must "
     "not change results.",
+    builds_store=True,
 )
 def q_snk_bucketed_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     li_name, ord_name = bucketed_register_existing(spark, sf_dir)
@@ -474,6 +476,7 @@ def partitioned_root(sf_dir: str) -> str:
     "as-of joins) ride the same layout. The oracle computes the same "
     "aggregate from the unpartitioned table — layout must not change "
     "results.",
+    builds_store=True,
 )
 def q_snk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = partitioned_root(sf_dir)
@@ -560,6 +563,7 @@ def partition_file_manifest(spark: SparkSession, root: str) -> DataFrame:
     "so BOTH content preservation and the one-file layout are "
     "hash-checked. Pruned reads still work post-compaction "
     "(tests/test_scale_features.py::test_compaction_reduces_files).",
+    builds_store=True,
 )
 def q_snk_partitioned_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw_root, out_root = compact_roots(sf_dir)

@@ -130,6 +130,7 @@ def _sql_interleave(qx: str, qy: str) -> str:
     "scan-local against a broadcast (lo, hi) scalar row; at 100 TB "
     "the write path is repartitionByRange(z) + sortWithinPartitions — "
     "one range exchange, then pure data skipping forever after.",
+    builds_store=True,
 )
 def q_snk_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = zorder_keys(load_table(spark, sf_dir, "orders"))
@@ -811,6 +812,7 @@ def theta_sketch_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     "touches <= #types*k stored rows, broadcast end-to-end — at "
     "100 TB any set-expression dashboard over the store costs "
     "kilobytes regardless of corpus size.",
+    builds_store=True,
 )
 def q_agg_theta_intersect_persisted(
     spark: SparkSession, sf_dir: str

@@ -616,6 +616,7 @@ _EVO_CUTOFF = "DATE '2001-06-01'"
     "catalog instead of re-deriving it per query, which is what "
     "snk_bucketed_reuse's metadata-only re-registration models); "
     "the data path is an ordinary pruned scan.",
+    builds_store=True,
 )
 def q_snk_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib

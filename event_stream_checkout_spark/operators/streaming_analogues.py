@@ -24,6 +24,7 @@ from ..scratch import scratch_dir
     doc="Tumbling window aggregation (T6): 1-hour windows via "
     "F.window; epoch-aligned so the oracle's date_trunc is identical. "
     "Streaming form: groupBy(window(ts,'1 hour')) + watermark.",
+    builds_store=True,
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -44,6 +45,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sliding window (T6): 1-hour windows every 15 minutes — each "
     "event lands in 4 windows. Oracle expands the same windows with "
     "epoch arithmetic.",
+    builds_store=True,
 )
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -74,6 +76,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "overlapping [ts, ts+gap) intervals; session end = last event + "
     "gap. The oracle derives identical sessions via lag + cumulative "
     "new-session flags.",
+    builds_store=True,
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -101,6 +104,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     "guarantee is weaker: drop-after-finalization; see "
     "tests/test_streaming.py::test_streaming_late_data_dropped_past_"
     "watermark for the empirically pinned behavior.)",
+    builds_store=True,
 )
 def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -124,6 +128,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Keyed streaming dedup, batch analogue (T2; ref first-writer-"
     "wins src/order_processor/app.py:66-75): earliest row per key "
     "wins. Streaming form: dropDuplicatesWithinWatermark.",
+    builds_store=True,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
@@ -151,6 +156,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recursive CTE. The only driver-side value is the bounded "
     "inventory dim seed (~100 rows — the reference's own seed is 5 "
     "rows, db/init_schema.sql:9-14).",
+    builds_store=True,
 )
 def q_state_ledger_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -278,6 +284,7 @@ _Q["state_ledger_stream"] = _dc_replace(
     "SDK-less hosts) — results are identical by the variant pin, and "
     "the vendored zip makes the degrade unreachable on any normal "
     "container.",
+    builds_store=True,
 )
 def q_state_ledger_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -405,6 +412,7 @@ def _ntz_micros(col: str):
     "Degrades to the batch sessionizer (identical results by the "
     "oracle's own construction) only where no protobuf runtime "
     "exists.",
+    builds_store=True,
 )
 def q_stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -528,6 +536,7 @@ def q_stream_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     "groupBy oracle — the stateful streaming path and the batch "
     "aggregate must be indistinguishable by results. Degrades to "
     "the batch groupBy only where no protobuf runtime exists.",
+    builds_store=True,
 )
 def q_stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -603,6 +612,7 @@ def q_stream_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     "which drives two deliberately spaced micro-batches through a "
     "short TTL.  Degrades to the batch groupBy only where no "
     "protobuf runtime exists.",
+    builds_store=True,
 )
 def q_stream_type_counts_tws_ttl(
     spark: SparkSession, sf_dir: str
@@ -741,6 +751,7 @@ def _register_stream_concurrency() -> None:
         "user_id-keyed stateful stream, boundaries two rows per "
         "session keyed by day, state is O(1) per day; the only "
         "non-parallel step is the #days-row carry.",
+        builds_store=True,
     )
     def q_stream_concurrency_tws(
         spark: SparkSession, sf_dir: str

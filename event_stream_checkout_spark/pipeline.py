@@ -23,8 +23,9 @@ Three settlement modes, trading fidelity vs parallelism:
   counted, ordered by the T5 contract) fits stock.
 - ``settle_replay_items`` — exact sequential greedy per product
   (failures release nothing they never took): parallel by product_id
-  via applyInPandas; item-level semantics (equals the reference when
-  orders are single-product).
+  via the ``take_stock_in_order`` kernel, a sorted ``mapInPandas``
+  fold; item-level semantics (equals the reference when orders are
+  single-product).
 - ``settle_replay_global`` — the reference's exact whole-order
   transactional loop under the T5 deterministic ordering
   (timestamp, order_id).  Inherently sequential — the reference
@@ -38,7 +39,9 @@ is nondeterministic under contention; we pin it down.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import itertools
+from collections.abc import Iterable, Iterator
+from operator import itemgetter
 from typing import NamedTuple
 
 import pandas as pd
@@ -294,35 +297,77 @@ def take_stock(
     return oks, after
 
 
+def take_stock_in_order(
+    items: DataFrame, stock: DataFrame, order: list[str]
+) -> DataFrame:
+    """``take_stock`` over each product's ``items`` in ``order``: adds
+    ``rn`` (1-based position within the product), ``item_ok`` and
+    ``remaining_after`` to the items' columns.  ``stock`` holds
+    (product_id, _stock); a product with no stock row starts at -1.
+
+    One shuffle by product_id puts each product's items in one
+    partition (AQE coalescing only merges whole partitions), sorted by
+    ``order`` within it.  ``mapInPandas`` folds the partition's Arrow
+    batches in turn, carrying the current product, its stock left and
+    its rows seen from one batch to the next, so the Python worker holds
+    one batch however many items a product has (the sort spills to disk
+    like any Spark sort)."""
+    schema = T.StructType(
+        items.schema.fields
+        + [
+            T.StructField("rn", T.LongType()),
+            T.StructField("item_ok", T.BooleanType()),
+            T.StructField("remaining_after", T.LongType()),
+        ]
+    )
+
+    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # The initial carry is an unknown product's: nothing seen, -1.
+        pid, left, seen = None, -1, 0
+        for pdf in batches:
+            rns, oks, afters = [], [], []
+            rows = zip(pdf["product_id"], pdf["quantity"], pdf["_stock"])
+            for p, run in itertools.groupby(rows, key=itemgetter(0)):
+                run = list(run)
+                if p != pid:
+                    pid, seen = p, 0
+                    left = -1 if pd.isna(run[0][2]) else int(run[0][2])
+                ok, after = take_stock([q for _, q, _ in run], left)
+                rns.extend(range(seen + 1, seen + len(run) + 1))
+                oks += ok
+                afters += after
+                left, seen = after[-1], seen + len(run)
+            yield pdf.assign(rn=rns, item_ok=oks, remaining_after=afters)[
+                schema.names
+            ]
+
+    return (
+        items.join(F.broadcast(stock), "product_id", "left")
+        .repartition("product_id")
+        .sortWithinPartitions("product_id", *order)
+        .mapInPandas(fold, schema)
+    )
+
+
 def settle_replay_items(orders: DataFrame, inventory: DataFrame) -> SettlementResult:
     """Exact sequential greedy per product (failures take nothing),
-    parallel across products via applyInPandas (U5-style custom
-    stateful operator).  Whole-order status = AND of its items'
+    parallel across products via ``take_stock_in_order`` (U5-style
+    custom stateful operator).  Whole-order status = AND of its items'
     outcomes — identical to the reference for single-product orders;
     for multi-product orders the item decisions are per-product-local
     (documented divergence vs the global transactional loop), so a
     FAILED order's admitted items still take their stock.
 
-    Scale: one shuffle by product_id; per-group state is one counter;
+    Scale: one shuffle by product_id; the carried state is one counter;
     Arrow-batched. This is the honest distributed form of the
     reference's FOR UPDATE loop.
     """
-    items = _exploded(orders)
     stock = inventory.select(
         "product_id", F.col("quantity_available").alias("_stock")
     )
-    joined = items.join(F.broadcast(stock), "product_id", "left")
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["timestamp", "order_id", "item_pos"], kind="stable")
-        stock_vals = pdf["_stock"].dropna()
-        oks, _ = take_stock(
-            pdf["quantity"].astype("int64"),
-            int(stock_vals.iloc[0]) if len(stock_vals) else -1,
-        )
-        return pdf.assign(item_ok=oks)[_ITEM_OUTCOME_SCHEMA.names]
-
-    flagged = joined.groupBy("product_id").applyInPandas(fold, _ITEM_OUTCOME_SCHEMA)
+    flagged = take_stock_in_order(
+        _exploded(orders), stock, ["timestamp", "order_id", "item_pos"]
+    )
     decided = _decide(flagged, F.collect_list(F.when(F.col("item_ok"), _item())))
     return _finalize(decided, inventory)
 

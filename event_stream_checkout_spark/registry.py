@@ -31,18 +31,30 @@ class Query:
     fn: QueryFn
     oracle: str | None  # DuckDB SQL, or None → driver does rows-only check
     doc: str = ""
+    # Writes or rewrites a shared on-disk store (a sink directory, a
+    # persisted index or sketch, a catalog table) while it runs, so two
+    # concurrent runs of it can read each other's half-written state.
+    builds_store: bool = False
 
 
 QUERIES: dict[str, Query] = {}
 
 
-def register(key: str, oracle: str | None = None, doc: str = ""):
+def register(
+    key: str, oracle: str | None = None, doc: str = "", builds_store: bool = False
+):
     """Decorator: add a query to the registry."""
 
     def wrap(fn: QueryFn) -> QueryFn:
         if key in QUERIES:
             raise ValueError(f"duplicate query key: {key}")
-        QUERIES[key] = Query(key=key, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        QUERIES[key] = Query(
+            key=key,
+            fn=fn,
+            oracle=oracle,
+            doc=doc or (fn.__doc__ or ""),
+            builds_store=builds_store,
+        )
         return fn
 
     return wrap
@@ -116,6 +128,10 @@ DRIVER_VERIFIED: frozenset[str] = frozenset(LATEST_GREEN)
 # trailing key missing the window is covered by the local null-sweep
 # parity plus the unchanged pristine contract.
 ROUND_MODIFIED: tuple[str, ...] = (
+    # - per-product stock take: the chunked rank-window replay (chunk
+    #   probe, chunk loop, carry joins) became one sorted mapInPandas
+    #   fold (pipeline.take_stock_in_order); oracle untouched.
+    "state_inventory_replay",
     # r17 OPTIMIZATION-round rewrites (OPTIMIZATION_r17.md), all
     # output-identical with oracles untouched, behavioral-risk order.
     # (Every r16 entry graded green in CORRECTNESS_r16 and rotated

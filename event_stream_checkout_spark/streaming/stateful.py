@@ -16,17 +16,17 @@ primitive when the stream is a pure per-key ledger (metering, quotas,
 token buckets) at 100 TB: state is partitioned with the stream, scales
 with executors, and checkpoints incrementally.
 
-Ledger vs chunked batch replay (``checkout.q_state_inventory_replay``)
-— SAME per-item semantics, pinned by
+Ledger vs batch replay (``checkout.q_state_inventory_replay``) — SAME
+per-item semantics, pinned by
 tests/test_scale_features.py::test_ledger_stream_matches_batch_replay:
 
 - LIVE stream → ledger: O(1) state per key in the state store,
   incremental checkpoints, no history retained, per-key sequential /
   cross-key parallel by construction.
-- BOUNDED historical fold → chunked replay: one ranked shuffle over
-  the history, no state store to operate, the whole result re-derives
-  from inputs (easier to audit/backfill), bounded memory via rank
-  chunks.
+- BOUNDED historical fold → batch replay (``pipeline.take_stock_in_order``):
+  one shuffle by product sorted within partitions, no state store to
+  operate, the whole result re-derives from inputs (easier to
+  audit/backfill), memory bounded by one Arrow batch per task.
 """
 
 from __future__ import annotations

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import duckdb
@@ -16,6 +17,24 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_session("ecs-tests")
     yield spark
+
+
+# Rows per Arrow batch a pandas UDF sees (Spark's default: 10,000).
+ARROW_BATCH_ROWS = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@contextlib.contextmanager
+def spark_confs(spark, confs: dict[str, str]):
+    """Set runtime ``confs`` for the duration of the block, restoring
+    the session's values after it."""
+    old = {key: spark.conf.get(key) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
 
 
 @pytest.fixture(scope="session")

@@ -16,14 +16,13 @@ each key's serial actions back-fill the others' stage tails), and the
 per-key parametrized tests below just re-raise that key's stored
 outcome — same coverage, same per-key granularity, same -x semantics,
 ~6x less wall.  Keys that build process-scoped scratch stores or
-catalog tables (the *_persisted / index / sink families) share one
+catalog tables (registered with ``builds_store=True``) share one
 mutex so two keys can never race a store build; everything else is
 read-only over the parquet inputs and independent by construction.
 """
 
 from __future__ import annotations
 
-import re
 import threading
 import traceback
 from concurrent.futures import ThreadPoolExecutor
@@ -37,18 +36,6 @@ from tools.null_sweep import canon  # single shared canonicalization
 
 QUERIES = load_all()
 from tests.conftest import SF_DIR  # noqa: E402
-
-# Keys whose fn builds shared process-scoped state (scratch-dir parquet
-# stores, warehouse tables, availableNow streaming sinks): serialized
-# behind one lock so concurrent builds of a SHARED dir can't interleave
-# half-written files.  The streaming/state families are included
-# because keys there COMPOSE (stream_concurrency_tws re-runs
-# stream_session_tws's query into the same per-tag sink dir — measured
-# collision: its _spark_metadata vanished mid-read when both ran
-# concurrently).
-_STORE_SERIAL = re.compile(
-    r"persisted|index|bucketed|incremental|snk_|stream_|state_"
-)
 
 
 def assert_frames_equal(spark_df: pd.DataFrame, oracle_df: pd.DataFrame, key: str):
@@ -94,7 +81,14 @@ def _run_one(key, spark, duck, store_lock):
     def body():
         q = QUERIES[key]
         spark.sparkContext.setJobDescription(f"parity: {key}")
-        if _STORE_SERIAL.search(key):
+        # A store-building key (``builds_store``: scratch-dir parquet
+        # stores, warehouse tables, availableNow streaming sinks) runs
+        # behind one lock so concurrent builds of a SHARED dir can't
+        # interleave half-written files.  Keys there COMPOSE
+        # (stream_concurrency_tws re-runs stream_session_tws's query
+        # into the same per-tag sink dir — measured collision: its
+        # _spark_metadata vanished mid-read when both ran concurrently).
+        if q.builds_store:
             with store_lock:
                 sdf = q.fn(spark, SF_DIR).toPandas()
         else:

@@ -14,12 +14,29 @@ Each test pins the INVARIANT an optimization relies on:
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
+from perfbench.measure import job_counters
 
-def _n_jobs(spark) -> int:
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+_groups = itertools.count()
+
+
+def _counted(spark, action):
+    """``action()``'s result and the Spark jobs it fired, counted by
+    ``perfbench.measure``'s ``job_counters`` over a job group unique
+    to this call."""
+    sc = spark.sparkContext
+    group = f"r17-counted-{next(_groups)}"
+    sc.setJobGroup(group, "r17 job count")
+    try:
+        result = action()
+    finally:
+        sc.setJobGroup(None, None)
+    return result, job_counters(sc, group)["jobs"]
 
 
 def test_connected_components_one_action_per_round(spark):
@@ -40,12 +57,13 @@ def test_connected_components_one_action_per_round(spark):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        before = _n_jobs(spark)
-        labels = {
-            r["doc_id"]: r["label"]
-            for r in _connected_components(edges).collect()
-        }
-        jobs = _n_jobs(spark) - before
+        labels, jobs = _counted(
+            spark,
+            lambda: {
+                r["doc_id"]: r["label"]
+                for r in _connected_components(edges).collect()
+            },
+        )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert labels == {0: 0, 1: 0, 2: 0, 3: 0, 8: 8, 9: 8}

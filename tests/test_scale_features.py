@@ -168,14 +168,17 @@ def test_salted_aggregation_matches_direct(spark):
     )
 
 
-def test_chunked_greedy_replay_matches_single_pass(spark):
-    """The incremental (chunked) per-key greedy fold produces exactly
-    the single-pass result — chunking changes memory shape, not
-    semantics — even with chunks small enough that every key spans
-    several of them."""
-    from event_stream_checkout_spark.operators.checkout import (
-        _chunked_greedy_replay,
+def test_take_stock_in_order_is_arrow_batch_size_invariant(spark):
+    """The per-product stock-take kernel carries a product's stock
+    across Arrow batch boundaries: at 1, 3 and 7 rows per batch (every
+    product spans several batches, and batches mix products), and over
+    7 uncoalesced shuffle partitions, the output equals the default
+    batch size's and a pure ``take_stock`` model's."""
+    from event_stream_checkout_spark.pipeline import (
+        take_stock,
+        take_stock_in_order,
     )
+    from tests.conftest import ARROW_BATCH_ROWS, spark_confs
 
     rows = []
     eid = 0
@@ -187,19 +190,38 @@ def test_chunked_greedy_replay_matches_single_pass(spark):
     items = spark.createDataFrame(
         rows, "product_id string, event_id long, item_ts long, quantity long"
     )
-    inv = spark.createDataFrame(
-        [("p1", 30), ("p2", 10)], "product_id string, stock long"
+    stock = {"p1": 30, "p2": 10}
+    stock_df = spark.createDataFrame(
+        list(stock.items()), "product_id string, _stock long"
     )
 
-    single = _chunked_greedy_replay(items, inv, chunk_rows=1 << 20).collect()
-    chunked = _chunked_greedy_replay(items, inv, chunk_rows=4).collect()
-    key = lambda r: (r["product_id"], r["rn"])
-    assert sorted(map(tuple, chunked), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, single), key=lambda t: (t[0], t[1])
-    )
-    # p3 has no inventory row: every item fails with remaining == -1.
-    p3 = [r for r in chunked if r["product_id"] == "p3"]
-    assert all(not r["item_ok"] and r["remaining_after"] == -1 for r in p3)
+    def run():
+        out = take_stock_in_order(items, stock_df, ["item_ts", "event_id"])
+        return sorted(map(tuple, out.collect()))
+
+    model = []
+    for pid in ("p1", "p2", "p3"):
+        run_rows = sorted((r for r in rows if r[0] == pid), key=lambda r: r[2])
+        oks, after = take_stock([r[3] for r in run_rows], stock.get(pid, -1))
+        model += [
+            (*r, rn, ok, a)
+            for rn, (r, ok, a) in enumerate(zip(run_rows, oks, after), start=1)
+        ]
+    default = run()
+    assert default == sorted(model)
+    for n in (1, 3, 7):
+        with spark_confs(spark, {ARROW_BATCH_ROWS: str(n)}):
+            assert run() == default, n
+    uncoalesced = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "7",
+        ARROW_BATCH_ROWS: "7",
+    }
+    with spark_confs(spark, uncoalesced):
+        assert run() == default
+    # p3 has no stock row: every item fails with remaining == -1.
+    p3 = [r for r in default if r[0] == "p3"]
+    assert p3 and all(not r[5] and r[6] == -1 for r in p3)
 
 
 def test_connected_components_fixpoint_resolves_chains(spark):
@@ -250,14 +272,14 @@ def test_ledger_stream_matches_batch_replay(spark, tmp_path):
     ledger (applyInPandasWithState — the operational stateful path in
     this environment) over the SAME derived item stream produces
     byte-identical per-item decisions to the batch
-    ``state_inventory_replay`` operator (chunked greedy fold), across a
-    micro-batch boundary.
+    ``state_inventory_replay`` operator (the sorted per-product
+    ``take_stock_in_order`` fold), across a micro-batch boundary.
 
     When to prefer which (also in streaming/stateful.py): the ledger is
     the right primitive for a LIVE per-key stream — state is
     partitioned with the stream, O(1) per key, checkpointed
-    incrementally, no history retained.  The chunked replay is the
-    right primitive for a bounded HISTORICAL fold — one ranked shuffle,
+    incrementally, no history retained.  The batch replay is the
+    right primitive for a bounded HISTORICAL fold — one sorted shuffle,
     no state store, and the whole history re-derives from inputs.
     Semantics are identical; this test pins that."""
     import pandas as pd  # noqa: F401

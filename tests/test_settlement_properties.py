@@ -15,6 +15,7 @@ Invariants checked on every generated stream:
 from __future__ import annotations
 
 import datetime as dt
+import json
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -167,29 +168,76 @@ def test_inventory_invariants_all_modes(sess, orders, mode):
         min_size=1,
         max_size=40,
     ),
-    chunk=st.sampled_from([1, 3, 7]),
+    batch=st.sampled_from([1, 3, 7]),
 )
-def test_chunked_replay_is_chunk_size_invariant(sess, items, chunk):
-    """The incremental greedy replay produces identical output for ANY
-    chunk size — chunking is a memory-bounding transform, never a
-    semantic one (the carry state is the full per-key state)."""
-    from event_stream_checkout_spark.operators.checkout import (
-        _chunked_greedy_replay,
+def test_stock_take_is_arrow_batch_size_invariant(sess, items, batch):
+    """The per-product stock-take kernel produces identical output for
+    ANY Arrow batch size — the batch is a memory bound, never a
+    semantic one (the carry across batches is the full per-key state)
+    — and equals a pure ``take_stock`` model."""
+    from tests.conftest import ARROW_BATCH_ROWS, spark_confs
+
+    stock = {"p1": 9, "p2": 4}
+    df = sess.createDataFrame(
+        [(pid, eid, qty) for eid, (pid, qty) in enumerate(items, start=1)],
+        "product_id string, event_id long, quantity long",
+    )
+    stock_df = sess.createDataFrame(
+        list(stock.items()), "product_id string, _stock long"
     )
 
-    rows = [
-        (pid, eid, eid, qty) for eid, (pid, qty) in enumerate(items, start=1)
-    ]
-    df = sess.createDataFrame(
-        rows, "product_id string, event_id long, item_ts long, quantity long"
-    )
-    inv = sess.createDataFrame(
-        [("p1", 9), ("p2", 4)], "product_id string, stock long"
-    )
-    big = sorted(
-        map(tuple, _chunked_greedy_replay(df, inv, chunk_rows=1 << 20).collect())
-    )
-    small = sorted(
-        map(tuple, _chunked_greedy_replay(df, inv, chunk_rows=chunk).collect())
-    )
-    assert big == small
+    def run():
+        return sorted(
+            map(tuple, P.take_stock_in_order(df, stock_df, ["event_id"]).collect())
+        )
+
+    model = []
+    for pid in ("p1", "p2", "p3"):
+        qtys = [(eid, q) for eid, (p, q) in enumerate(items, start=1) if p == pid]
+        oks, after = P.take_stock([q for _, q in qtys], stock.get(pid, -1))
+        model += [
+            (pid, eid, q, rn, ok, a)
+            for rn, ((eid, q), ok, a) in enumerate(zip(qtys, oks, after), start=1)
+        ]
+    default = run()
+    with spark_confs(sess, {ARROW_BATCH_ROWS: str(batch)}):
+        assert run() == default == sorted(model)
+
+
+def test_replay_items_carries_stock_across_arrow_batches(sess):
+    """``settle_replay_items`` at 2 rows per Arrow batch: each product's
+    single-item orders span several batches, and the statuses and stock
+    equal the default batch size's and, single-product orders being
+    the case where the modes agree, the reference simulator's."""
+    from tests.conftest import ARROW_BATCH_ROWS, spark_confs
+
+    orders = [
+        (cust, [(pid, q)])
+        for q in (2, 4, 1, 3, 6)
+        for cust, pid in (("cust-a", "prod-105"), ("cust-b", "prod-104"))
+    ] + [("cust-c", [("prod-999", 1)])]
+
+    def run():
+        _, res = P.run_checkout_batch(
+            sess, to_raw(sess, orders), mode="replay_items"
+        )
+        statuses = {
+            (
+                r["customer_id"],
+                tuple(
+                    (i["product_id"], i["quantity"]) for i in json.loads(r["items"])
+                ),
+            ): r["status"]
+            for r in res.orders.collect()
+        }
+        stock = {
+            r["product_id"]: r["quantity_available"]
+            for r in res.inventory.collect()
+        }
+        return statuses, stock
+
+    default = run()
+    with spark_confs(sess, {ARROW_BATCH_ROWS: "2"}):
+        assert run() == default
+    sim_statuses, sim_stock = simulate_reference(orders)
+    assert default == (sim_statuses, sim_stock)
