@@ -27,10 +27,12 @@ engine's micro-batch rule is *optimistic prefix-demand admission* — an
 order is PROCESSED iff, for every item, the running demand for that
 product up to and including this item (ordered by event time, all
 orders counted) fits in stock.  Deterministic, shuffle-parallel by
-product, and SQL-expressible.  The exact sequential replay is also
-provided (``state_inventory_replay``) via ``pipeline.take_stock_in_order``,
-a per-product fold over sorted Arrow batches — see golden tests for its
-semantics vs a pure-Python model.
+product, and SQL-expressible.  Admission comes from
+``pipeline.admit_in_order``, the kernel the stream's
+``settle_optimistic`` runs per micro-batch.  The exact sequential
+replay (``state_inventory_replay``) comes from
+``pipeline.take_stock_in_order``, a per-product fold over sorted Arrow
+batches — see golden tests for its semantics vs a pure-Python model.
 
 At 100 TB: items partition by ``product_id`` (the window and the
 inventory join share that partitioning — one shuffle, reused), the
@@ -44,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..pipeline import take_stock_in_order
+from ..pipeline import admit_in_order, take_stock_in_order
 from ..registry import register
 from ..tables import load_table
 
@@ -174,25 +176,18 @@ def inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagged_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Items with running per-product demand + sufficiency flag (J1+P8).
-
-    The window and the join both key on ``product_id`` — Catalyst reuses
-    one hash partitioning for both; the inventory side is broadcast.
-    A missing product (null stock) is insufficient, matching the
-    reference's ``not result`` branch (src/order_processor/app.py:88).
+    """Items with running per-product demand + sufficiency flag (J1+P8):
+    the engine's admission kernel, ``pipeline.admit_in_order``, over
+    the derived items in event order.  A missing product (null stock)
+    is insufficient, matching the reference's ``not result`` branch
+    (src/order_processor/app.py:88).
     """
-    items = order_items(spark, sf_dir)
-    inv = inventory(spark, sf_dir)
-    w = (
-        Window.partitionBy("product_id")
-        .orderBy("item_ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    stock = inventory(spark, sf_dir).select(
+        "product_id", F.col("stock").alias("_stock")
     )
-    ranked = items.withColumn("running_demand", F.sum("quantity").over(w))
-    return ranked.join(F.broadcast(inv.drop("product_name")), "product_id", "left").withColumn(
-        "item_ok",
-        F.coalesce(F.col("running_demand") <= F.col("stock"), F.lit(False)),
-    )
+    return admit_in_order(
+        order_items(spark, sf_dir), stock, ["item_ts", "event_id"]
+    ).withColumnRenamed("_stock", "stock")
 
 
 def settled_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,7 +549,6 @@ def q_scan_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     "across Arrow batches, so memory is one batch per task however "
     "hot the product. Sequentiality within a key is irreducible (the "
     "fold is order-dependent); keys stay parallel.",
-    builds_store=True,
 )
 def q_state_inventory_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = order_items(spark, sf_dir).select(

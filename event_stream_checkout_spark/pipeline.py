@@ -15,12 +15,17 @@ src/ingest_order/app.py:13-92):
 4. ``settle_*``           — per-order all-or-nothing inventory
                             settlement (processor app.py:78-119)
 
+``run_checkout_batch`` runs all four; the stream, which validates and
+identifies orders as they arrive, calls ``settle`` (steps 3-4).
+
 Three settlement modes, trading fidelity vs parallelism:
 
 - ``settle_optimistic``  — prefix-demand admission (set-based, fully
   shuffle-parallel by product; the 100 TB default).  An order is
   PROCESSED iff every item's running demand (all prior requests
-  counted, ordered by the T5 contract) fits stock.
+  counted, ordered by the T5 contract) fits stock.  The admission
+  kernel, ``admit_in_order``, also serves the graded settlement keys
+  (operators/checkout.py).
 - ``settle_replay_items`` — exact sequential greedy per product
   (failures release nothing they never took): parallel by product_id
   via the ``take_stock_in_order`` kernel, a sorted ``mapInPandas``
@@ -233,26 +238,37 @@ def _finalize(decided: DataFrame, inventory: DataFrame) -> SettlementResult:
     return SettlementResult(out_orders, new_inventory, processed_events)
 
 
-def settle_optimistic(orders: DataFrame, inventory: DataFrame) -> SettlementResult:
-    """Prefix-demand admission (the scalable micro-batch rule; see
-    module doc and operators/checkout.py)."""
-    items = _exploded(orders)
+def admit_in_order(
+    items: DataFrame, stock: DataFrame, order: list[str]
+) -> DataFrame:
+    """Prefix-demand admission, the twin of ``take_stock_in_order``:
+    adds ``running_demand`` (the product's demand in ``order`` up to
+    and including the item, failed items counted) and ``item_ok`` (it
+    fits ``_stock``).  ``stock`` holds (product_id, _stock) and is
+    broadcast; a product with no stock row admits nothing (app.py:88)."""
     w = (
         Window.partitionBy("product_id")
-        .orderBy("timestamp", "order_id", "item_pos")
+        .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    flagged = (
-        items.withColumn("running", F.sum("quantity").over(w))
-        .join(
-            F.broadcast(inventory.select("product_id", "quantity_available")),
-            "product_id",
-            "left",
-        )
+    return (
+        items.withColumn("running_demand", F.sum("quantity").over(w))
+        .join(F.broadcast(stock), "product_id", "left")
         .withColumn(
             "item_ok",
-            F.coalesce(F.col("running") <= F.col("quantity_available"), F.lit(False)),
+            F.coalesce(F.col("running_demand") <= F.col("_stock"), F.lit(False)),
         )
+    )
+
+
+def settle_optimistic(orders: DataFrame, inventory: DataFrame) -> SettlementResult:
+    """Prefix-demand admission (the scalable micro-batch rule; see
+    module doc and ``admit_in_order``)."""
+    stock = inventory.select(
+        "product_id", F.col("quantity_available").alias("_stock")
+    )
+    flagged = admit_in_order(
+        _exploded(orders), stock, ["timestamp", "order_id", "item_pos"]
     )
     # All or nothing: a PROCESSED order takes every item, a FAILED one none.
     decided = _decide(
@@ -424,6 +440,24 @@ def settle_replay_global(orders: DataFrame, inventory: DataFrame) -> SettlementR
     return _finalize(decided, inventory)
 
 
+_SETTLE_MODES = {
+    "optimistic": settle_optimistic,
+    "replay_items": settle_replay_items,
+    "replay_global": settle_replay_global,
+}
+
+
+def settle(
+    orders: DataFrame,
+    inventory: DataFrame,
+    existing_orders: DataFrame | None = None,
+    mode: str = "optimistic",
+) -> SettlementResult:
+    """Dedup → settle for orders already validated and identified
+    (``order_id``, customer_id, items, timestamp)."""
+    return _SETTLE_MODES[mode](dedup_first_writer(orders, existing_orders), inventory)
+
+
 def run_checkout_batch(
     spark,
     raw: DataFrame,
@@ -433,7 +467,8 @@ def run_checkout_batch(
 ) -> tuple[ValidationResult, SettlementResult]:
     """End-to-end batch checkout: validate → identity → dedup → settle.
 
-    The streaming pipeline calls exactly this per micro-batch.
+    The stream validates and identifies each order as it arrives, then
+    calls ``settle``.
 
     Default mode is ``optimistic`` — the shuffle-parallel admission rule
     that scales to 100 TB.  ``replay_global`` reproduces the reference's
@@ -442,11 +477,5 @@ def run_checkout_batch(
     """
     inventory = inventory if inventory is not None else seed_inventory(spark)
     split = validate_split(raw)
-    with_ids = derive_order_ids(split.valid)
-    deduped = dedup_first_writer(with_ids, existing_orders)
-    settle = {
-        "optimistic": settle_optimistic,
-        "replay_items": settle_replay_items,
-        "replay_global": settle_replay_global,
-    }[mode]
-    return split, settle(deduped, inventory)
+    orders = derive_order_ids(split.valid)
+    return split, settle(orders, inventory, existing_orders, mode)

@@ -5,7 +5,7 @@ DAG:
 
   file/JSON source (S1/S2, standing in for the HTTP+queue edge)
     → from_json with explicit schema + corrupt-record channel (P3)
-    → foreachBatch( validate → identity → dedup → settle )  (M2 module)
+    → foreachBatch( validate → identity → settle (dedup + settle_*) )  (M2)
         ├─ orders table, batch_id=N partition        (S6)
         ├─ inventory, versioned atomic swap          (T1/S6)
         ├─ OrderProcessed events, batch_id=N partition (S4/S5)
@@ -67,6 +67,7 @@ import functools
 import json
 import os
 import shutil
+import warnings
 from collections import Counter
 from collections.abc import Callable
 
@@ -80,8 +81,8 @@ from ..pipeline import (
     PROCESSED_EVENT_COLUMNS,
     derive_order_ids,
     local_frame,
-    run_checkout_batch,
     seed_inventory,
+    settle,
     validate_split,
 )
 from ..session import configure
@@ -223,8 +224,10 @@ class CheckoutStream:
         rebuilds them from source + committed state)."""
         try:
             df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass  # cleanup must never fail a batch or mask its error
+        except Exception as exc:  # must never fail a batch or mask its error
+            warnings.warn(
+                f"could not release a micro-batch pin: {exc!r}", RuntimeWarning
+            )
 
     @staticmethod
     def _replace_partition(
@@ -334,13 +337,16 @@ class CheckoutStream:
                 )
             )
         )
-        published = (
-            with_ids.filter(~F.col("_pub_fail"))
-            .select("customer_id", "items", "timestamp", "attempts")
+        published = with_ids.filter(~F.col("_pub_fail")).select(
+            "order_id", "customer_id", "items", "timestamp", "attempts"
         )
 
         # ---- queue merge + processing-failure injection (T4) ----------
-        queued = published.unionByName(self.pending_retries(before_batch=batch_id))
+        # A retry is stored without its order_id and derives it again:
+        # the same content, so the same id as its 202 response.
+        queued = published.unionByName(
+            derive_order_ids(self.pending_retries(before_batch=batch_id))
+        )
         fail_cond = self.process_fail(queued) if self.process_fail else F.lit(False)
         queued = queued.withColumn("_fail", fail_cond)
         # Same coherence pin as _pub_fail above: one evaluation feeds
@@ -370,14 +376,11 @@ class CheckoutStream:
         # state.  The inventory is driver-local: read once here, its
         # next version computed on the driver below.
         inventory = self.current_inventory(before_batch=batch_id)
-        _, res = run_checkout_batch(
-            self.spark,
+        res = settle(
             processable,
-            inventory=inventory,
-            existing_orders=self.orders_table().filter(
-                F.col("batch_id") < batch_id
-            ),
-            mode=self.mode,
+            inventory,
+            self.orders_table().filter(F.col("batch_id") < batch_id),
+            self.mode,
         )
         # Materialize ALL decisions in ONE pin before any write (T3:
         # decide, then apply).  The settlement is a lazy plan over the

@@ -1,8 +1,10 @@
-"""Table catalog: declared schemas + loaders for the driver testdata.
+"""Table catalog: table names + loaders for the driver testdata.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet each under
-``/root/testdata/sf{0.001,0.01,0.1}/``.
+``/root/testdata/sf{0.001,0.01,0.1}/``.  No schema is declared: every
+read infers its schema from the parquet footers, which costs one Spark
+job per table read while a query's frame is built.
 
 Timestamp policy: everything is TIMESTAMP_NTZ (naive UTC).  The
 ``events`` table is physically parquet TIMESTAMP(NANOS), which Spark's

@@ -204,6 +204,48 @@ def test_stock_take_is_arrow_batch_size_invariant(sess, items, batch):
         assert run() == default == sorted(model)
 
 
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    items=st.lists(
+        st.tuples(
+            st.sampled_from(["p1", "p2", "p3"]),   # p3 has no stock row
+            st.integers(min_value=0, max_value=12),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_admission_equals_prefix_sum_model(sess, items):
+    """The prefix-demand admission kernel equals a pure-Python model:
+    an item is admitted iff its product's running demand in order, up
+    to and including it (admitted or not), fits the product's stock; a
+    product with no stock row admits nothing."""
+    stock = {"p1": 9, "p2": 4}
+    df = sess.createDataFrame(
+        [(pid, eid, qty) for eid, (pid, qty) in enumerate(items, start=1)],
+        "product_id string, event_id long, quantity long",
+    )
+    stock_df = sess.createDataFrame(
+        list(stock.items()), "product_id string, _stock long"
+    )
+    got = P.admit_in_order(df, stock_df, ["event_id"]).select(
+        "product_id", "event_id", "quantity", "running_demand", "_stock", "item_ok"
+    )
+
+    model, demand = [], {}
+    for eid, (pid, q) in enumerate(items, start=1):
+        demand[pid] = demand.get(pid, 0) + q
+        have = stock.get(pid)
+        model.append(
+            (pid, eid, q, demand[pid], have, have is not None and demand[pid] <= have)
+        )
+    assert sorted(map(tuple, got.collect())) == sorted(model)
+
+
 def test_replay_items_carries_stock_across_arrow_batches(sess):
     """``settle_replay_items`` at 2 rows per Arrow batch: each product's
     single-item orders span several batches, and the statuses and stock

@@ -227,6 +227,26 @@ def test_retry_then_dlq(stream_env):
         for r in stream.current_inventory().collect()
     }
     assert inv["prod-101"] == 49 and inv["prod-102"] == 20
+    # cust-t settled two batches after its 202 response, under the
+    # order_id that response carried (the reference's content digest).
+    import hashlib
+    import uuid
+
+    payload = {"c": "cust-t", "i": [{"product_id": "prod-101", "quantity": 1}]}
+    t_id = str(uuid.UUID(hashlib.md5(
+        json.dumps(payload, sort_keys=True).encode("utf-8")
+    ).hexdigest()))
+    accepted = {
+        r["order_id"]
+        for r in spark.read.parquet(stream.responses_dir).collect()
+        if r["status_code"] == 202
+    }
+    assert t_id in accepted
+    assert [
+        (r["order_id"], r["status"])
+        for r in stream.orders_table().collect()
+        if r["customer_id"] == "cust-t"
+    ] == [(t_id, "PROCESSED")]
 
 
 def test_nondeterministic_fail_predicate_coherent(stream_env):
@@ -950,6 +970,22 @@ def test_failed_batch_releases_cache_and_pins(stream_env):
             stream.process_batch(raw, batch_id)
         assert persisted() <= before
         assert raw.storageLevel == StorageLevel(False, False, False, False, 1)
+
+
+def test_release_pin_warns_instead_of_raising():
+    """A pin whose storage cannot be released costs a RuntimeWarning
+    naming the error, never an exception: the release runs in the
+    batch's ``finally`` and must not fail the batch or mask its error."""
+    from unittest import mock
+
+    pin = mock.MagicMock()
+    jrdd = pin._jdf.queryExecution.return_value.analyzed.return_value.rdd
+    jrdd.return_value.unpersist.side_effect = RuntimeError("block lost")
+    with pytest.warns(RuntimeWarning) as caught:
+        CheckoutStream._release_pin(pin)
+    assert [str(w.message) for w in caught] == [
+        "could not release a micro-batch pin: RuntimeError('block lost')"
+    ]
 
 
 def test_streaming_replay_items_matches_batch(stream_env):
